@@ -641,7 +641,8 @@ def band_buckets(
             bucket = f"xxhash64({key})"
         bands.append(f"struct({b} as band, {bucket} as bucket)")
     return signatures.selectExpr(
-        f"`{id_col}` as __id", f"explode(array({', '.join(bands)})) as bb"
+        "`" + id_col.replace("`", "``") + "` as __id",
+        f"explode(array({', '.join(bands)})) as bb",
     ).select("__id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
 
 

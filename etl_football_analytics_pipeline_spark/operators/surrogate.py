@@ -9,7 +9,7 @@ a 100 TB fact table.
 
 `zip_with_index` removes the bottleneck: range-repartition by the
 order key, number rows partition-locally, and add per-partition
-offsets computed from a tiny count pass (the classic zipWithIndex
+offsets computed from a tiny count pass (the classic RDD zip-with-index
 two-phase scheme, done with DataFrame ops so columns/pushdown are
 preserved). No single-partition stage anywhere; the only driver data
 is one long per partition.

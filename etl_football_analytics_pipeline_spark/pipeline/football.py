@@ -5,10 +5,10 @@ Semantic parity notes (each build function cites its reference lines):
 
 - The reference's id assignment and keep-first dedup depend on RAW FILE
   ORDER (pandas frame order). Spark plans have no implicit row order,
-  so `read_csv_with_order` attaches an explicit `__row` file-position
-  column (driver reads only the header; data parsing is a distributed
-  `from_csv` over an indexed line RDD) and every order-dependent step
-  (A10 keep-first, T6 sequential ids) states its order on `__row` —
+  so `read_csv_with_order` attaches an explicit `__row` column that
+  increases in file order (driver reads only the header; the data pass
+  is Spark's own CSV scan, no Python workers) and every order-dependent
+  step (A10 keep-first, T6 sequential ids) orders on `__row` —
   deterministic under any partitioning, identical to pandas order.
 - Name-cleaning chains (X2/X3) are order-sensitive literal replaces;
   they are encoded token-for-token from the reference and verified
@@ -28,6 +28,8 @@ import csv as _csv
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..sources.csv_utils import dedupe_names, read_string_csv
+
 
 # ---------------------------------------------------------------------------
 # Ordered CSV source
@@ -35,37 +37,23 @@ from pyspark.sql import functions as F
 
 
 def read_csv_with_order(spark: SparkSession, path: str) -> DataFrame:
-    """CSV scan that carries the original file position as `__row`
-    (0 = first data line). All columns string-typed, like the
-    reference's `dtype=str` re-reads (`scr/Extract.py:59-61`).
+    """CSV scan that carries the original file order as `__row`. All
+    columns string-typed, like the reference's `dtype=str` re-reads
+    (`scr/Extract.py:59-61`).
 
-    The header line is read driver-side; data lines parse distributed
-    via `from_csv` on a zipWithIndex'd text RDD, so order survives any
-    partitioning. Empty CSV fields arrive as NULL (pandas NaN parity).
+    The header line is read driver-side and deduped like
+    `flatten_header_levels`; the data pass is Spark's own CSV scan
+    (`read_string_csv`: empty fields NULL, short rows NULL-padded).
+    `__row` is `monotonically_increasing_id()`: a file's splits are
+    numbered in file-offset order, so it increases in file order under
+    any split size — but it is not dense, so it gives order only.
     """
     with open(path, newline="") as fh:
         header = next(_csv.reader(fh))
-    names = []
-    seen: dict[str, int] = {}
-    for n in header:
-        n = n.strip()
-        if n in seen:
-            seen[n] += 1
-            names.append(f"{n}_{seen[n]}")
-        else:
-            seen[n] = 0
-            names.append(n)
-    schema = ", ".join(f"`{n}` string" for n in names)
-    rdd = (
-        spark.sparkContext.textFile(path)
-        .zipWithIndex()
-        .filter(lambda p: p[1] > 0)
-        .map(lambda p: (p[0], p[1] - 1))
+    names = dedupe_names([n.strip() for n in header])
+    return read_string_csv(spark, path, names).withColumn(
+        "__row", F.monotonically_increasing_id()
     )
-    lines = spark.createDataFrame(rdd, "value string, __row long")
-    return lines.select(
-        F.from_csv("value", schema).alias("__r"), "__row"
-    ).select("__r.*", "__row")
 
 
 # ---------------------------------------------------------------------------
@@ -648,49 +636,51 @@ def build_fact_team_point(raw_standings: DataFrame, dim_team: DataFrame) -> Data
 
 def run_pipeline(spark: SparkSession, raw_dir: str, out_dir: str) -> dict[str, DataFrame]:
     """The Transform-stage DAG (`scr/Transform.py:800-813`): dims first,
-    then facts that consume them; stage handoff is Parquet, not CSV.
-    Missing optional sources degrade exactly like the reference
-    (`team_point.csv not found, skipping`)."""
+    then facts that consume them. The stage handoff is Parquet, not
+    CSV: each table is written once to `out_dir/<table>`, and the
+    returned frames read those files back — facts join the dims as
+    written, and the load consumes the handoff instead of re-running
+    the transform. Missing optional sources degrade exactly like the
+    reference (`team_point.csv not found, skipping`)."""
     import os
+
+    out: dict[str, DataFrame] = {}
+
+    def raw(name: str) -> DataFrame | None:
+        path = os.path.join(raw_dir, name)
+        return read_csv_with_order(spark, path) if os.path.exists(path) else None
+
+    def handoff(name: str, df: DataFrame) -> DataFrame:
+        path = os.path.join(out_dir, name)
+        df.write.mode("overwrite").parquet(path)
+        out[name] = spark.read.parquet(path)
+        return out[name]
 
     raw_team_match = read_csv_with_order(spark, os.path.join(raw_dir, "fbref_fact_team_match.csv"))
     season_stats = read_csv_with_order(
         spark, os.path.join(raw_dir, "fbref_fact_player_season_stats.csv")
     )
     raw_team = read_csv_with_order(spark, os.path.join(raw_dir, "dim_team.csv"))
+    match_stats = raw("fbref_fact_player_match_stats.csv")
+    raw_stadium = raw("dim_stadium.csv")
+    raw_standings = raw("team_point.csv")
 
-    match_stats_path = os.path.join(raw_dir, "fbref_fact_player_match_stats.csv")
-    match_stats = (
-        read_csv_with_order(spark, match_stats_path)
-        if os.path.exists(match_stats_path)
-        else None
+    dim_player = handoff("dim_player", build_dim_player(season_stats, match_stats))
+    dim_team = handoff("dim_team", build_dim_team(raw_team))
+    dim_match = handoff("dim_match", build_dim_match(raw_team_match))
+    handoff("dim_season", build_dim_season(raw_team_match))
+    if raw_stadium is not None:
+        handoff("dim_stadium", build_dim_stadium(raw_stadium))
+
+    handoff(
+        "fact_team_match_clean",
+        build_fact_team_match(raw_team_match, dim_team, dim_match, dim_player),
     )
-
-    out: dict[str, DataFrame] = {}
-    out["dim_player"] = build_dim_player(season_stats, match_stats)
-    out["dim_team"] = build_dim_team(raw_team)
-    out["dim_match"] = build_dim_match(raw_team_match)
-    out["dim_season"] = build_dim_season(raw_team_match)
-
-    stadium_path = os.path.join(raw_dir, "dim_stadium.csv")
-    if os.path.exists(stadium_path):
-        out["dim_stadium"] = build_dim_stadium(read_csv_with_order(spark, stadium_path))
-
-    out["fact_team_match_clean"] = build_fact_team_match(
-        raw_team_match, out["dim_team"], out["dim_match"], out["dim_player"]
-    )
-
     if match_stats is not None:
-        out["fact_player_match_clean"] = build_fact_player_match(
-            match_stats, out["dim_match"], out["dim_player"], out["dim_team"]
+        handoff(
+            "fact_player_match_clean",
+            build_fact_player_match(match_stats, dim_match, dim_player, dim_team),
         )
-
-    standings_path = os.path.join(raw_dir, "team_point.csv")
-    if os.path.exists(standings_path):
-        out["fact_team_point"] = build_fact_team_point(
-            read_csv_with_order(spark, standings_path), out["dim_team"]
-        )
-
-    for name, df in out.items():
-        df.write.mode("overwrite").parquet(os.path.join(out_dir, name))
+    if raw_standings is not None:
+        handoff("fact_team_point", build_fact_team_point(raw_standings, dim_team))
     return out

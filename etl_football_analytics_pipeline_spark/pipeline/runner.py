@@ -13,10 +13,11 @@ Stage mapping:
   the reference's `.last_extract_date.txt`) is stamped after a
   successful extract.
 - transform — pipeline.football.run_pipeline (the Transform-stage DAG:
-  dims first, then facts).
-- load — pipeline.warehouse.to_warehouse → write_warehouse (versioned
-  snapshot commits by default; dims upsert, facts insert-if-absent —
-  re-running a load is a no-op).
+  dims first, then facts), which writes the Parquet handoff under
+  PROCESSED_DIR and returns frames over those files.
+- load — pipeline.warehouse.to_warehouse → write_warehouse over the
+  handoff (versioned snapshot commits; dims upsert, facts
+  insert-if-absent — re-running a load is a no-op).
 
 Retries reproduce the DAG's `default_args` semantics per STAGE (a
 stage that raises is retried up to `retries` times with `retry_delay`
@@ -95,7 +96,6 @@ def run_etl(
     extract: Callable[[SparkSession, str], object] | None = None,
     retries: int = 2,
     retry_delay_s: float = 0.0,
-    versioned: bool = True,
 ) -> EtlReport:
     """Run extract → transform → load once, with per-stage retries.
 
@@ -135,9 +135,7 @@ def run_etl(
     loaded = _run_stage(
         report,
         "load",
-        lambda: write_warehouse(
-            spark, to_warehouse(processed), warehouse_dir, versioned=versioned
-        ),
+        lambda: write_warehouse(spark, to_warehouse(processed), warehouse_dir),
         retries,
         retry_delay_s,
     )
@@ -152,6 +150,10 @@ def run_etl(
 def main(argv: list[str] | None = None) -> int:
     """CLI: python -m etl_football_analytics_pipeline_spark.pipeline.runner
     RAW_DIR PROCESSED_DIR WAREHOUSE_DIR [--retries N] [--retry-delay S]
+
+    Transforms the raw CSVs in RAW_DIR into the Parquet handoff under
+    PROCESSED_DIR and loads it into the versioned warehouse under
+    WAREHOUSE_DIR; exits 1 if any stage failed after its retries.
     """
     from ..session import get_spark
 
@@ -161,7 +163,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("warehouse_dir")
     ap.add_argument("--retries", type=int, default=2)
     ap.add_argument("--retry-delay", type=float, default=0.0)
-    ap.add_argument("--flat", action="store_true", help="unversioned flat parquet layout")
     args = ap.parse_args(argv)
 
     spark = get_spark(app_name="football-etl")
@@ -172,7 +173,6 @@ def main(argv: list[str] | None = None) -> int:
         args.warehouse_dir,
         retries=args.retries,
         retry_delay_s=args.retry_delay,
-        versioned=not args.flat,
     )
     for s in report.stages:
         status = "OK " if s.ok else "FAIL"

@@ -21,21 +21,17 @@ Schema mapping (reference evidence):
   (`scr/Load.py:95-103,193-202,305-324,366-405`)
 
 Idempotent re-load semantics (M2 upsert for dims, M3 insert-if-absent
-for facts) live in operators/merge.py; `write_warehouse` composes them
-when a target already exists.
+for facts) live in operators/merge.py; `write_warehouse` applies them
+through the versioned snapshot layer (sources.versioned.merge_commit).
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-
-from ..operators.merge import insert_if_absent, upsert
-from ..utils import commit_staged_dir, recover_swapped_dir
 
 # warehouse table → (primary key, is_dimension)
 WAREHOUSE_KEYS: dict[str, tuple[list[str], bool]] = {
@@ -177,7 +173,6 @@ def write_warehouse(
     spark: SparkSession,
     warehouse: dict[str, DataFrame],
     out_dir: str,
-    versioned: bool = True,
     keep_versions: int = 5,
 ) -> dict[str, DataFrame]:
     """Idempotent bulk load to parquet: dims upsert by PK (M2,
@@ -185,60 +180,31 @@ def write_warehouse(
     DO NOTHING`) — re-loading the same data is a no-op, the invariant
     the reference claims for its warehouse (README.md:29,199).
 
-    DEFAULT path (`versioned=True`): every table commits through the
-    snapshot layer (sources.versioned) — each load becomes an
-    immutable version published by one atomic `os.replace` of the
-    `_LATEST` pointer, so readers see the old snapshot or the new one,
-    never a partial table, a crash mid-write leaves the previous
-    version live, and time travel across loads comes free — the
-    parquet-native analog of the reference's PostgreSQL transactions
-    (closes the non-atomic-overwrite risk documented in SURVEY §7).
+    Every table `out_dir/<table>` commits through the snapshot layer
+    (sources.versioned.merge_commit) — each load becomes an immutable
+    version published by one atomic `os.replace` of the `_LATEST`
+    pointer, so readers see the old snapshot or the new one, never a
+    partial table, a crash mid-write leaves the previous version live,
+    and time travel across loads comes free — the parquet-native
+    analog of the reference's PostgreSQL transactions (closes the
+    non-atomic-overwrite risk documented in SURVEY §7).
 
-    Each versioned load is a FULL snapshot, so history grows linearly
-    with loads; `keep_versions` bounds it (vacuum after each commit,
-    never touching the live version — time travel reaches the newest
+    Each load is a FULL snapshot, so history grows linearly with
+    loads; `keep_versions` bounds it (vacuum after each commit, never
+    touching the live version — time travel reaches the newest
     `keep_versions` snapshots). Pass 0/negative to keep everything.
+    Returns each table's live version."""
+    from ..sources.versioned import merge_commit, read_latest, vacuum
 
-    `versioned=False` keeps the flat single-directory layout (for
-    readers that must scan `out_dir/<table>` directly as plain
-    parquet) via a hardened stage-and-rename swap: orphaned `.__old`
-    copies from a crash between the two renames are recovered before
-    the merge, so no crash point loses committed rows."""
-    if versioned:
-        from ..sources.versioned import merge_commit, read_latest, vacuum
-
-        out: dict[str, DataFrame] = {}
-        for name, df in warehouse.items():
-            pk, is_dim = WAREHOUSE_KEYS[name]
-            table_dir = os.path.join(out_dir, name)
-            merge_commit(spark, table_dir, df, list(pk), insert_only=not is_dim)
-            if keep_versions > 0:
-                vacuum(table_dir, keep=keep_versions)
-            out[name] = read_latest(spark, table_dir)
-        return out
-    loaded: dict[str, DataFrame] = {}
+    out: dict[str, DataFrame] = {}
     for name, df in warehouse.items():
         pk, is_dim = WAREHOUSE_KEYS[name]
-        path = os.path.join(out_dir, name)
-        recover_swapped_dir(path, spark)
-        if os.path.isdir(path):
-            target = spark.read.parquet(path)
-            merged = upsert(target, df, pk) if is_dim else insert_if_absent(target, df, pk)
-        else:
-            merged = df
-        # stage to a sibling directory then SWAP via renames: relying
-        # on cache() to guard an overwrite-of-the-read-path is unsafe
-        # under memory pressure (evicted blocks would recompute from
-        # the deleted files); the rename swap never reads and writes
-        # the same path in one job, and a crash between the renames is
-        # recovered losslessly by recover_swapped_dir on the next load
-        tmp = path + ".__stage"
-        shutil.rmtree(tmp, ignore_errors=True)
-        merged.write.mode("overwrite").parquet(tmp)
-        commit_staged_dir(path, tmp, spark)
-        spark.catalog.refreshByPath(path)
-        loaded[name] = spark.read.parquet(path)
-    return loaded
+        table_dir = os.path.join(out_dir, name)
+        merge_commit(spark, table_dir, df, list(pk), insert_only=not is_dim)
+        if keep_versions > 0:
+            vacuum(table_dir, keep=keep_versions)
+        out[name] = read_latest(spark, table_dir)
+    return out
 
 
 def write_dim_scd2(

@@ -18,6 +18,7 @@ Scale notes that apply across the module:
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -270,13 +271,15 @@ def _mirror_tag(sf_dir: str, *tables: str) -> str:
     """Cache tag from the sf_dir plus EVERY participating source's
     mtime — regenerating any one source invalidates the mirror (a tag
     keyed on a single table would silently serve stale rows for the
-    others)."""
+    others). Every character outside `[A-Za-z0-9_]` maps to `_`: the
+    tag names catalog tables, where e.g. a `-` in the data path is an
+    INVALID_IDENTIFIER."""
     mtimes = "_".join(
         str(int(os.stat(p).st_mtime)) if os.path.exists(p) else "0"
         for t in tables
         for p in [os.path.join(sf_dir, f"{t}.parquet")]
     )
-    return f"{sf_dir.strip('/').replace('/', '_')}_{mtimes}".replace(".", "_")
+    return re.sub(r"[^A-Za-z0-9_]", "_", f"{sf_dir.strip('/')}_{mtimes}")
 
 
 # e4-scaled revenue expression shared by the star/bucketed/bloom legs
@@ -1110,9 +1113,7 @@ def sketch_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-scanning the corpus (the bm25/ivf/minhash index discipline).
     from ..sources.registry import owned_ready, read_parquet_memo, user_cache_dir
 
-    _src = os.path.join(sf_dir, "lineitem.parquet")
-    _mtime = int(os.stat(_src).st_mtime) if os.path.exists(_src) else 0
-    _tag = f"{sf_dir.strip('/').replace('/', '_')}_{_mtime}_s1".replace(".", "_")
+    _tag = _mirror_tag(sf_dir, "lineitem") + "_s1"
     cms_dir = user_cache_dir("sketch-cms", _tag)
     if not owned_ready(cms_dir):
         portable_cms(vals, "g", "v", d=CMS_D, w=CMS_W).write.mode(

@@ -12,27 +12,33 @@ module reproduces Spark-side:
 - S5: CSV sink (`scr/Transform.py:19-22`).
 
 Header flattening (P4) is driver-side metadata logic — zero cost at
-any scale; the data pass stays a normal distributed CSV scan.
+any scale; the data pass is always Spark's own CSV scan (no Python
+workers, splittable at any file size).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
 def flatten_header_levels(level0: list[str], level1: list[str]) -> list[str]:
     """P4 — join non-empty header levels with `_`, ignoring pandas
-    `Unnamed: n` placeholders (`scr/Extract.py:29-51`)."""
+    `Unnamed: n` placeholders (`scr/Extract.py:29-51`), then dedupe."""
     names = []
     for l0, l1 in zip(level0, level1):
         l0 = "" if l0.startswith("Unnamed:") else l0.strip()
         l1 = "" if l1.startswith("Unnamed:") else l1.strip()
         parts = [p for p in (l0, l1) if p]
         names.append("_".join(parts) if parts else "col")
-    # de-duplicate repeated names deterministically (left to right);
-    # synthesized '<name>_<n>' suffixes are themselves checked against
-    # every emitted name — ['a','a','a_1'] must not produce two 'a_1'
-    # columns (a duplicate DDL name breaks every downstream resolve)
+    return dedupe_names(names)
+
+
+def dedupe_names(names: list[str]) -> list[str]:
+    """Unique column names, left to right: a repeat takes the first
+    `<name>_<n>` suffix not yet emitted, so `['a', 'a', 'a_1']` becomes
+    `['a', 'a_1', 'a_1_1']` (a duplicate DDL name breaks every
+    downstream resolve with AMBIGUOUS_REFERENCE)."""
     counts: dict[str, int] = {}
     used: set[str] = set()
     out = []
@@ -46,6 +52,19 @@ def flatten_header_levels(level0: list[str], level1: list[str]) -> list[str]:
     return out
 
 
+def read_string_csv(
+    spark: SparkSession, path: str, names: list[str], sep: str = ","
+) -> DataFrame:
+    """Spark's own CSV scan of `path` minus its first line, every
+    column string-typed under `names` (`dtype=str`,
+    `scr/Extract.py:59-61`). Line-based and splittable: empty fields
+    read as NULL, short rows are NULL-padded, and only the file's
+    first line is skipped — a header repeated inside the data stays a
+    data row."""
+    ddl = ", ".join("`" + n.replace("`", "``") + "` string" for n in names)
+    return spark.read.schema(ddl).option("header", True).option("sep", sep).csv(path)
+
+
 def read_two_row_header_csv(
     spark: SparkSession,
     path: str,
@@ -54,10 +73,12 @@ def read_two_row_header_csv(
     """S3 — read a CSV whose first TWO lines are header levels;
     column names are the flattened `level0_level1` composites.
 
-    The two header lines are read driver-side (metadata); the data
-    pass is a distributed text scan that drops the first two lines of
-    the (single) header file by index and parses the rest as CSV with
-    the synthesized all-string schema — the same contract as the
+    The two header lines are read as metadata; the data pass is
+    `read_string_csv`, which skips the first header line, and the
+    second is dropped as the first row of the scan partition that
+    starts at file offset 0 (`monotonically_increasing_id() == 0`;
+    this needs the split size, `spark.sql.files.maxPartitionBytes`, to
+    exceed the first header line) — the same contract as the
     reference's `header=[0,1]` + flatten + `dtype=str` re-read
     (`scr/Extract.py:59-67`).
     """
@@ -75,14 +96,9 @@ def read_two_row_header_csv(
         return next(_csv.reader([line], delimiter=sep), [])
 
     names = flatten_header_levels(_fields(head[0]), _fields(head[1]))
-    data_rdd = (
-        spark.sparkContext.textFile(path)
-        .zipWithIndex()
-        .filter(lambda pair: pair[1] >= 2)
-        .map(lambda pair: pair[0])
+    return read_string_csv(spark, path, names, sep).filter(
+        F.monotonically_increasing_id() > 0
     )
-    schema = ", ".join(f"`{n}` string" for n in names)
-    return spark.read.schema(schema).option("sep", sep).csv(data_rdd)
 
 
 def read_csv_dropmalformed(

@@ -605,3 +605,20 @@ def test_minhash_index_probe_integrity_assert_raises_on_docs_without_bands(
     minhash_index_probe(
         spark, idx, delta, threshold=0.2, integrity_check=False
     ).collect()
+
+
+def test_band_buckets_quotes_backticked_id_column(spark):
+    """`band_buckets` projects `id_col` through SQL text: a backtick in
+    the name is escaped, not parsed, and the buckets equal those keyed
+    by a plain id column."""
+    from etl_football_analytics_pipeline_spark.operators.dedup import band_buckets
+
+    sigs = spark.createDataFrame(
+        [(1, list(range(8))), (2, list(range(8, 16)))], "id long, signature array<long>"
+    )
+    odd = sigs.withColumnRenamed("id", "doc`id")
+    got = band_buckets(odd, "doc`id", num_bands=2, rows_per_band=4)
+    want = band_buckets(sigs, "id", num_bands=2, rows_per_band=4)
+    assert got.columns == ["__id", "band", "bucket"]
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+    assert got.count() == 4

@@ -347,3 +347,33 @@ def test_zvalue_rejects_bit_overflow(spark):
     with _pytest.raises(ValueError, match="bits <= 12"):
         zvalue(cols, bits=16)
     zvalue(cols, bits=12)  # at the bound: fine
+
+
+def test_mirror_tag_is_an_identifier():
+    """Mirror tags name catalog tables, so every character outside
+    [A-Za-z0-9_] in the data path maps to `_`."""
+    from etl_football_analytics_pipeline_spark.plans.relational import _mirror_tag
+
+    tag = _mirror_tag("/data/sf-0.01 (copy)/v+1", "orders")
+    assert tag == "data_sf_0_01__copy__v_1_0"
+    assert _mirror_tag("/data/sf0.01/", "orders") == "data_sf0_01_0"
+
+
+def test_bucketed_mirrors_from_a_dashed_path(spark, tmp_path):
+    """j6_star_join_agg's bucketed leg builds its catalog tables from a
+    data directory whose path contains `-`."""
+    import os
+
+    from etl_football_analytics_pipeline_spark.plans.relational import (
+        bucketed_fact_mirrors,
+    )
+
+    sf = tmp_path / "sf-0.001"
+    sf.mkdir()
+    for t in ("orders", "lineitem"):
+        os.symlink(f"/root/testdata/sf0.001/{t}.parquet", sf / f"{t}.parquet")
+    tbl_o, tbl_l = bucketed_fact_mirrors(spark, str(sf))
+    assert "-" not in tbl_o + tbl_l
+    n_orders = spark.read.parquet(f"{sf}/orders.parquet").count()
+    assert spark.table(tbl_o).count() == n_orders
+    assert spark.table(tbl_l).count() > 0

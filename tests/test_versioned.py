@@ -81,7 +81,7 @@ def test_merge_commit_upsert_and_insert_only(spark, table_dir):
 
 
 def test_versioned_is_the_default_warehouse_path(spark, table_dir):
-    """write_warehouse with no flag commits through the snapshot layer:
+    """write_warehouse commits through the snapshot layer (its only path):
     the table lands as version directories behind a _LATEST pointer
     (readers see old-or-new, never partial — pointer replace is
     atomic), and a crash mid-write (orphan version dir, pointer not
@@ -109,7 +109,7 @@ def test_versioned_is_the_default_warehouse_path(spark, table_dir):
 
 
 def test_versioned_warehouse_load_idempotent(spark, table_dir):
-    """write_warehouse(versioned=True): dim upsert / fact insert-only
+    """write_warehouse: dim upsert / fact insert-only
     through snapshot commits; re-loading the same data adds a version
     whose content is identical (idempotent load, auditable history)."""
     from etl_football_analytics_pipeline_spark.pipeline.warehouse import write_warehouse
@@ -120,8 +120,8 @@ def test_versioned_warehouse_load_idempotent(spark, table_dir):
             "team_id long, team_name string, stadium_id long",
         )
     }
-    out1 = write_warehouse(spark, dims, table_dir, versioned=True)
-    out2 = write_warehouse(spark, dims, table_dir, versioned=True)
+    out1 = write_warehouse(spark, dims, table_dir)
+    out2 = write_warehouse(spark, dims, table_dir)
     assert _rows(out1["dim_team"]) == _rows(out2["dim_team"])
     assert current_version(os.path.join(table_dir, "dim_team")) == 2
     # dim upsert: changed name wins on reload
@@ -130,7 +130,7 @@ def test_versioned_warehouse_load_idempotent(spark, table_dir):
             [(2, "Beta-v2", 11)], "team_id long, team_name string, stadium_id long"
         )
     }
-    out3 = write_warehouse(spark, dims2, table_dir, versioned=True)
+    out3 = write_warehouse(spark, dims2, table_dir)
     assert _rows(out3["dim_team"]) == [(1, "Alpha", 10), (2, "Beta-v2", 11)]
 
 
@@ -469,7 +469,7 @@ def test_schema_evolution_rejects_case_colliding_columns(spark, table_dir):
 
 
 def test_versioned_warehouse_on_remote_scheme(spark, tmp_path):
-    """The versioned-default warehouse composes with the r8 remote
+    """The versioned warehouse composes with the r8 remote
     commit protocol: write_warehouse to a file:// URI lands each table
     as version dirs behind _commits markers (no pointer file, no
     renames), loads stay idempotent, and retention vacuums through the
@@ -491,7 +491,7 @@ def test_versioned_warehouse_on_remote_scheme(spark, tmp_path):
             "team_id long, team_name string, stadium_id long",
         )
     }
-    out1 = write_warehouse(spark, dims, out_dir, versioned=True, keep_versions=2)
+    out1 = write_warehouse(spark, dims, out_dir, keep_versions=2)
     tdir = f"{out_dir}/dim_team"
     assert current_version(tdir) == 1
     assert _rows(out1["dim_team"]) == [(1, "Alpha", 10), (2, "Beta", 11)]
@@ -501,12 +501,12 @@ def test_versioned_warehouse_on_remote_scheme(spark, tmp_path):
             [(2, "Beta-v2", 11)], "team_id long, team_name string, stadium_id long"
         )
     }
-    out2 = write_warehouse(spark, dims2, out_dir, versioned=True, keep_versions=2)
+    out2 = write_warehouse(spark, dims2, out_dir, keep_versions=2)
     assert current_version(tdir) == 2
     assert _rows(out2["dim_team"]) == [(1, "Alpha", 10), (2, "Beta-v2", 11)]
     assert _rows(read_latest(spark, tdir)) == [(1, "Alpha", 10), (2, "Beta-v2", 11)]
     # third load trips the keep=2 vacuum: v1 is retired, markers agree
-    write_warehouse(spark, dims2, out_dir, versioned=True, keep_versions=2)
+    write_warehouse(spark, dims2, out_dir, keep_versions=2)
     local = f"{tmp_path}/wh/dim_team"
     assert not _os.path.isdir(f"{local}/v00001")
     assert not _os.path.exists(f"{local}/_commits/c00000001")
