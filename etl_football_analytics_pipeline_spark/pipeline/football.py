@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.csv_utils import dedupe_names, read_string_csv
+from ..utils import coalesce_small, run_concurrently
 
 
 # ---------------------------------------------------------------------------
@@ -47,13 +48,16 @@ def read_csv_with_order(spark: SparkSession, path: str) -> DataFrame:
     (`read_string_csv`: empty fields NULL, short rows NULL-padded).
     `__row` is `monotonically_increasing_id()`: a file's splits are
     numbered in file-offset order, so it increases in file order under
-    any split size — but it is not dense, so it gives order only.
+    any split size — but it is not dense, so it gives order only. A
+    file that fits one scan split reads as one partition
+    (`utils.coalesce_small`, applied above `__row`, so the ids are
+    those of the scan).
     """
     with open(path, newline="") as fh:
         header = next(_csv.reader(fh))
     names = dedupe_names([n.strip() for n in header])
-    return read_string_csv(spark, path, names).withColumn(
-        "__row", F.monotonically_increasing_id()
+    return coalesce_small(
+        read_string_csv(spark, path, names).withColumn("__row", F.monotonically_increasing_id())
     )
 
 
@@ -648,16 +652,17 @@ def run_pipeline(spark: SparkSession, raw_dir: str, out_dir: str) -> dict[str, D
     found, skipping`)."""
     import os
 
-    from ..utils import run_concurrently
-
     def raw(name: str) -> DataFrame | None:
         path = os.path.join(raw_dir, name)
         return read_csv_with_order(spark, path) if os.path.exists(path) else None
 
     def handoff(name: str, build) -> DataFrame:
+        # read back with the written frame's schema (a file scan makes
+        # it nullable, as inference would): no footer-inference job
         path = os.path.join(out_dir, name)
-        build().write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
+        df = build()
+        df.write.mode("overwrite").parquet(path)
+        return coalesce_small(spark.read.schema(df.schema).parquet(path))
 
     def wave(builds: dict) -> dict[str, DataFrame]:
         return run_concurrently(

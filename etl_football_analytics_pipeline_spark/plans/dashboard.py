@@ -20,6 +20,14 @@ Each function returns the lazy DataFrame; Catalyst plans the star
 joins as broadcast-hash (dims are tiny) with aggregate pushdown —
 the optimization PostgreSQL was doing for the reference now happens
 in-engine.
+
+Plan shape: the views read versioned snapshots, and a snapshot that
+fits one scan split reads as one partition (`read_version` in
+`sources/versioned.py`). One partition satisfies every grouping and
+ordering requirement, so over such tables the aggregates, windows and
+sorts plan no shuffle exchange, and a request runs as few Spark jobs
+as its broadcasts and scans need. Larger snapshots keep their file
+splits and shuffle as usual.
 """
 
 from __future__ import annotations

@@ -291,6 +291,11 @@ def dq_expectations_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         for i, (_, sql) in enumerate(_DQ_RULES)
     )
     tagged = li.selectExpr(f"{mask} AS __m", *prof_cols)
+    # one COUNT slot (and one unpivot struct) per non-empty rule
+    # subset: 2^n - 1 grows exponentially, so past 6 rules (63 slots)
+    # group by the mask instead — GROUP BY __m, one row per combo that
+    # occurs, its name built from the set bits
+    assert len(names) <= 6, f"{len(names)} DQ rules need the grouped-by-combo form"
     # one global aggregate: report slots (sum → NULL on empty input,
     # matching expect_report), combo counts (count → 0, so empty
     # combos filter out), profile null/min/max slots (typed min/max,

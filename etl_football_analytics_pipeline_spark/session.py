@@ -55,8 +55,11 @@ def get_spark(
         # local mode reads small SINGLE-FILE tables on many cores:
         # Spark's 128m split default then puts an entire table in one
         # scan task, serializing every scan-side map (measured ~2x on
-        # the fact-table queries). 1m splits spread the scan; AQE
+        # the fact-table queries). 1m splits spread larger scans; AQE
         # re-coalesces post-shuffle so tiny partitions don't cascade.
+        # Tables that fit one split (this or openCostInBytes, whichever
+        # is smaller) read as one partition and plan no shuffle where
+        # the engine reads them (`utils.coalesce_small`).
         # Non-local masters keep the 128m default — at cluster scale
         # split count is governed by the file layout, not this knob.
         .config(

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..utils import one_split_bytes
+
 
 def flatten_header_levels(level0: list[str], level1: list[str]) -> list[str]:
     """P4 — join non-empty header levels with `_`, ignoring pandas
@@ -75,12 +77,13 @@ def read_two_row_header_csv(
 
     The two header lines are read as metadata; the data pass is
     `read_string_csv`, which skips the first header line, and the
-    second is dropped as the first row of the scan partition that
-    starts at file offset 0 (`monotonically_increasing_id() == 0`;
-    this needs the split size, `spark.sql.files.maxPartitionBytes`, to
-    exceed the first header line) — the same contract as the
-    reference's `header=[0,1]` + flatten + `dtype=str` re-read
-    (`scr/Extract.py:59-67`).
+    second is dropped as the scan's first row — the same contract as
+    the reference's `header=[0,1]` + flatten + `dtype=str` re-read
+    (`scr/Extract.py:59-67`). When the second line starts inside the
+    smallest split the scan can cut (`utils.one_split_bytes`), that
+    row is `monotonically_increasing_id() == 0`, a lazy filter. A
+    first line longer than that can push the second into a later
+    split, so one build-time job finds the scan's lowest id instead.
     """
     head = [r.value for r in spark.read.text(path).limit(2).collect()]
     if len(head) < 2:
@@ -96,9 +99,14 @@ def read_two_row_header_csv(
         return next(_csv.reader([line], delimiter=sep), [])
 
     names = flatten_header_levels(_fields(head[0]), _fields(head[1]))
-    return read_string_csv(spark, path, names, sep).filter(
-        F.monotonically_increasing_id() > 0
-    )
+    data = read_string_csv(spark, path, names, sep)
+    # the second line starts after the first and its terminator (\r\n
+    # at most); split 0 reads every line that starts at or before its end
+    if len(head[0].encode("utf-8")) + 2 <= one_split_bytes(spark):
+        return data.filter(F.monotonically_increasing_id() > 0)
+    ided = data.withColumn("__hdr_id", F.monotonically_increasing_id())
+    first = ided.agg(F.min("__hdr_id")).first()[0]
+    return ided.filter(F.col("__hdr_id") > first).drop("__hdr_id")
 
 
 def read_csv_dropmalformed(

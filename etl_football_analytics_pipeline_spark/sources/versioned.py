@@ -71,6 +71,7 @@ import warnings
 from pyspark.sql import DataFrame, SparkSession
 
 from ..manifest import CommitConflict, _conflict_backoff
+from ..utils import coalesce_small
 
 _POINTER = "_LATEST"
 _COMMITS = "_commits"
@@ -449,13 +450,15 @@ def read_latest(spark: SparkSession, table_dir: str) -> DataFrame:
     v = current_version(table_dir)
     if v is None:
         raise FileNotFoundError(f"no committed version in {table_dir!r}")
-    return spark.read.parquet(version_dir(table_dir, v))
+    return read_version(spark, table_dir, v)
 
 
 def read_version(spark: SparkSession, table_dir: str, version: int) -> DataFrame:
     """Time travel: scan a specific committed version (versions are
-    immutable until vacuumed)."""
-    return spark.read.parquet(version_dir(table_dir, version))
+    immutable until vacuumed). A snapshot that fits one scan split
+    reads as one partition (`utils.coalesce_small`), so merges and
+    dashboard queries over it plan no shuffle."""
+    return coalesce_small(spark.read.parquet(version_dir(table_dir, version)))
 
 
 def vacuum(table_dir: str, keep: int = 2) -> list[int]:

@@ -220,7 +220,6 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
     if target <= 1:
         return df
-    size = None
     try:
         qe = df._jdf.queryExecution()
         node = qe.logical()
@@ -240,11 +239,49 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
             if root not in ("Project", "Filter", "SubqueryAlias"):
                 break
             node = node.child()
-        size = int(qe.optimizedPlan().stats().sizeInBytes())
-    except Exception:  # noqa: BLE001 — any py4j/analysis hiccup → exact probe
-        size = None
-    if size is not None and size < (1 << 60) and size <= _SPREAD_SMALL_BYTES:
+    except Exception:  # noqa: BLE001 — any py4j/analysis hiccup → size checks below
+        pass
+    size = _size_estimate(df)
+    if size is not None and size <= _SPREAD_SMALL_BYTES:
         return df.repartition(target)
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
+
+
+def _size_estimate(df: DataFrame) -> int | None:
+    """Catalyst's metadata-only size estimate of `df` in bytes; None
+    when there is none (RDD-backed and kernel-derived plans report a
+    Long.MaxValue-scale sentinel) or the probe fails."""
+    try:
+        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:  # noqa: BLE001 — any py4j/analysis hiccup → no estimate
+        return None
+    return size if size < (1 << 60) else None
+
+
+def one_split_bytes(spark) -> int:
+    """The smallest split a file scan cuts under this session's conf:
+    min(spark.sql.files.maxPartitionBytes, spark.sql.files.openCostInBytes).
+    Spark's split size is min(maxPartitionBytes, max(openCostInBytes,
+    bytes per core)), so a file no longer than this is always read
+    whole, by one task."""
+    conf = spark._jsparkSession.sessionState().conf()
+    return min(int(conf.filesMaxPartitionBytes()), int(conf.filesOpenCostInBytes()))
+
+
+def coalesce_small(df: DataFrame) -> DataFrame:
+    """`df.coalesce(1)` when its size estimate (`_size_estimate`) is at
+    most one scan split (`one_split_bytes`), else `df` unchanged.
+
+    Such a scan already runs as one task, but it reports an unknown
+    partitioning, so every aggregate, sort, window or keyed join above
+    it plans a shuffle exchange (and AQE runs each as one more job).
+    Coalescing to one partition is narrow and reports SinglePartition,
+    which satisfies every clustered and ordered distribution, so plans
+    over small tables need no exchange. Frames above the threshold, or
+    without an estimate, keep their file splits."""
+    size = _size_estimate(df)
+    if size is not None and size <= one_split_bytes(df.sparkSession):
+        return df.coalesce(1)
+    return df

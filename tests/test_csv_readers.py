@@ -116,6 +116,27 @@ def test_two_row_header_reader_matches_line_indexed_form(spark, tmp_path):
     assert sorted(_expected(lines) + [("Perf", "Perf", "Unnamed: 2")], key=repr) == got
 
 
+def test_two_row_header_reader_with_split_below_first_header_line(spark, tmp_path):
+    """A split no longer than the first header line puts the second
+    header line in a later scan partition; it must still be dropped,
+    and a data row repeating it must stay."""
+    level0 = ",".join(f"Performance group {i} with a long name" for i in range(3))
+    lines = _data_lines(200)
+    path = tmp_path / "long_header.csv"
+    path.write_text("\n".join([level0, "id,name,val", *lines, "id,name,val"]) + "\n")
+    with small_splits(spark, str(len(level0) // 2)):
+        df = read_two_row_header_csv(spark, str(path))
+        assert df.columns == [f"Performance group {i} with a long name_{c}"
+                              for i, c in enumerate(["id", "name", "val"])]
+        assert df.rdd.getNumPartitions() > 1
+        got = sorted(map(tuple, df.collect()), key=repr)
+        want = sorted(
+            map(tuple, _rdd_two_row_reader(spark, str(path), df.columns).collect()), key=repr
+        )
+    assert got == want
+    assert got == sorted(_expected(lines) + [("id", "name", "val")], key=repr)
+
+
 @pytest.mark.parametrize("sep", [";", "\t"])
 def test_two_row_header_reader_honours_sep(spark, tmp_path, sep):
     path = tmp_path / "sep.csv"

@@ -140,7 +140,8 @@ def test_extract_retries_then_succeeds(spark, raw):
 
 def test_pipeline_returns_the_parquet_handoff(spark, raw, tmp_path):
     """The load consumes what the transform wrote: every frame
-    run_pipeline returns scans only files under its out_dir. The
+    run_pipeline returns scans only files under its out_dir, with the
+    schema a plain read of those files infers. The
     tables come back in the serial order, dims then facts, though each
     wave builds concurrently."""
     from etl_football_analytics_pipeline_spark.pipeline.football import run_pipeline
@@ -152,6 +153,9 @@ def test_pipeline_returns_the_parquet_handoff(spark, raw, tmp_path):
         "fact_team_match_clean", "fact_player_match_clean", "fact_team_point",
     ]
     for name, df in processed.items():
+        # read back with the written schema: the same one, nullability
+        # included, that footer inference would give
+        assert df.schema == spark.read.parquet(os.path.join(out_dir, name)).schema, name
         files = df.inputFiles()
         assert files, name
         for f in files:
