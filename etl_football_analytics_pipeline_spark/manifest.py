@@ -89,9 +89,9 @@ committed version and scan an immutable tree. The properties:
 
 Retention is explicit: ``manifest_vacuum(keep=N)`` retires all but
 the newest N versions and deletes any tree no surviving marker
-references, RAISING on a failed delete — ``forget_keys_hard``'s
-"rows exist nowhere on disk" contract rests on deletions being
-verified, exactly like ``sources.versioned.vacuum``.
+references, RAISING on a failed delete — a hard erasure's "rows
+exist nowhere on disk" contract rests on deletions being verified,
+exactly like ``sources.versioned.vacuum``.
 
 Reference analog: the reference commits its warehouse loads through
 PostgreSQL transactions (`scr/Load.py`); this is the same atomicity
@@ -128,7 +128,7 @@ def _conflict_backoff(
 ) -> None:
     """Jittered exponential backoff between optimistic-commit retries —
     ONE policy shared by every retrying commit path (manifest_commit,
-    merge_into_raw, merge_commit, delete_commit), so contention
+    merge_commit, delete_commit), so contention
     behavior cannot silently diverge between protocols.
 
     CAPPED at ``cap_s`` (r10): the r10 contention sweep
@@ -593,9 +593,8 @@ def manifest_commit(
     slow rival's verify needed to see, or the tree its rebase is
     scanning). Note for ERASURE-shaped rewrites: the bump means the
     pre-erasure tree survives as version N-1 until the next commit or
-    vacuum — hard-erasure flows must (and `pipeline.forget_keys_hard`
-    does) finish with an explicit quiesced ``manifest_vacuum`` rather
-    than relying on commit-path retention.
+    vacuum — hard-erasure flows must finish with an explicit quiesced
+    ``manifest_vacuum`` rather than relying on commit-path retention.
 
     ``steal_after_s`` overrides the stale-intent/lock steal window
     (default: module ``INTENT_STEAL_S``) — raise it on stores with
@@ -929,8 +928,8 @@ def manifest_append(
     the new tree gets ``df`` written as FRESH parquet files plus every
     data file of the live tree HARD-LINKED in (local filesystems —
     zero bytes copied, parquet files are immutable so two trees
-    sharing inodes is safe; remote schemes FS-copy, see the
-    object-store note in ``pipeline.incremental.merge_into_raw``).
+    sharing inodes is safe; remote schemes FS-copy, which is correct
+    but O(table) per append on object stores).
     This is the add-files commit of a table format reduced to this
     layout — the cost of an append is the delta plus O(files)
     metadata, never a table rewrite.
@@ -944,10 +943,8 @@ def manifest_append(
     the retention-under-concurrency note on ``manifest_commit``.
 
     UNPARTITIONED relations only: the live tree's files are linked
-    flat, and ``df`` is written flat next to them — a partitionBy
-    layout needs the partition-aware merge in
-    ``pipeline.incremental.merge_into_raw``. Raises on a live tree
-    with partition subdirectories."""
+    flat, and ``df`` is written flat next to them. Raises on a live
+    tree with partition subdirectories."""
 
     def write(tree: str) -> None:
         from .utils import _clone_dir
@@ -989,9 +986,7 @@ def manifest_append(
             if st.isDirectory():
                 raise ValueError(
                     f"manifest_append: {dest!r} is a partitioned layout "
-                    f"(child {name!r}); use "
-                    "pipeline.incremental.merge_into_raw for "
-                    "partition-aware appends"
+                    f"(child {name!r}); only flat relations append"
                 )
             _clone_dir(spark, f"{live}/{name}", f"{tree}/{name}")
 

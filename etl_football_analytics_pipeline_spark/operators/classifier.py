@@ -32,8 +32,8 @@ Spark-first split of work, same discipline as the dedup kernels:
   (labels are the scarce resource); scoring is the corpus-wide pass.
 - **Scoring** is map-only again: broadcast the weight vector
   (`dim+1` doubles — O(1) in the corpus), sigmoid of one dot product
-  per document. Feeds `pipeline.llm_corpus.curate_corpus`-style
-  gates the same way quality_scores does.
+  per document. Feeds quality gates the same way quality_scores
+  does.
 
 No MLlib dependency: the model is a numpy vector and every data-path
 stage is the engine's own kernel pattern (mapInPandas over

@@ -148,13 +148,16 @@ def _hot_pred(
     rows = frame.take(_HOT_LITERAL_MAX + 1)
     if len(rows) > _HOT_LITERAL_MAX:
         return F.coalesce(F.col("__hot"), F.lit(False)), frame
-    pred = F.lit(False)
-    for r in rows:
-        pred = pred | (
-            (F.col("__bidx") == F.lit(r["__bidx"]))
-            & (F.col("__bkey") == F.lit(r["__bkey"]))
-        )
-    return pred, None
+    if not rows:
+        return F.lit(False), None
+    # one In over the key struct: a set test, not a |rows|-deep OR tree
+    # (literals carry the columns' names and types, as In requires)
+    types = {f.name: f.dataType for f in frame.schema.fields}
+    keys = [
+        F.struct(*[F.lit(r[c]).cast(types[c]).alias(c) for c in ("__bidx", "__bkey")])
+        for r in rows
+    ]
+    return F.struct("__bidx", "__bkey").isin(*keys), None
 
 
 def _salt_cols(salt_k: int, id_alias: str, hot: F.Column):

@@ -9,15 +9,14 @@ warehouse-standard remedy on top of the same merge machinery:
 - `scd2_build` — derive a full Type-2 history (effective_from /
   effective_to / is_current / version) from a change feed, collapsing
   consecutive no-op changes;
-- `scd2_apply` — merge one new snapshot into an existing Type-2
-  dimension: close changed current rows, append their replacements,
-  open rows for brand-new keys;
 - `scd2_lookup` — point-in-time fact enrichment: join each fact to
   the attribute state valid at the fact's own timestamp;
 - `table_diff` — CDC between two table versions (e.g. two snapshots
   of `sources.versioned`): one row per inserted / deleted / updated
-  key with both images, the change feed that drives incremental
-  downstream refresh.
+  key with both images.
+
+`plans/quality.warehouse_history_suite` runs all three against its
+DuckDB oracle.
 
 Scale shape: every operator is one hash shuffle on the dimension key
 (a window or a single full-outer join) — no driver state, no
@@ -33,7 +32,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-__all__ = ["scd2_build", "scd2_apply", "scd2_lookup", "table_diff"]
+__all__ = ["scd2_build", "scd2_lookup", "table_diff"]
 
 
 def _attrs_differ(left_prefix: str, attr_cols: Sequence[str]) -> F.Column:
@@ -107,157 +106,6 @@ def scd2_build(
     )
 
 
-def scd2_apply(
-    dim: DataFrame,
-    snapshot: DataFrame,
-    key_cols: Sequence[str],
-    attr_cols: Sequence[str],
-    snapshot_ts,
-    order_col: str | None = None,
-) -> DataFrame:
-    """Merge one new full snapshot into an existing Type-2 dimension.
-
-    `dim` has the scd2_build schema (key, attrs, effective_from,
-    effective_to, is_current, version); `snapshot` has (key, attrs)
-    observed at `snapshot_ts` — a literal (one timestamp for the whole
-    snapshot) or a Column evaluated against `snapshot` (per-row
-    observation times, the CDC-feed form: each key closes/opens at its
-    OWN change time). Produces the updated dimension:
-
-    - history rows (is_current = false) pass through untouched;
-    - current rows whose key is absent from the snapshot pass through
-      (absence is not deletion in SCD2 — the entity just wasn't
-      re-observed);
-    - current rows whose snapshot attrs are unchanged pass through;
-    - current rows whose attrs changed are CLOSED (effective_to =
-      snapshot_ts, is_current = false) and a new current row is
-      appended with version + 1;
-    - brand-new keys open at version 1.
-
-    ONE full-outer hash join between the current slice and the
-    snapshot covers every branch (changed / unchanged / unobserved /
-    brand-new key) — a single shuffle on `key_cols`, no second
-    anti-join pass over the dimension. Output column order matches
-    `dim`.
-    """
-    ts_expr = snapshot_ts if isinstance(snapshot_ts, F.Column) else F.lit(snapshot_ts)
-    to_type = dict(dim.dtypes)["effective_to"]
-    history = dim.filter(~F.col("is_current"))
-    current = dim.filter(F.col("is_current"))
-    # a dirty snapshot repeating a key would fan out the full-outer
-    # join: the SAME current row lands in closed_rows twice and TWO
-    # is_current replacement rows share one version — a permanently
-    # corrupt dimension. Keep one deterministic survivor per key:
-    # with `order_col` (an observation-time / sequence column in the
-    # snapshot) the HIGHEST value wins — "keep latest", the right
-    # answer for CDC feeds carrying several updates of one key; else
-    # the lowest row by the ORDERABLE attrs (the insert_if_absent
-    # rule — a stable arbitrary pick, NOT recency: callers whose
-    # snapshots can repeat keys with different payloads should pass
-    # order_col, ADVICE r7). Unorderable attr types (maps) are
-    # excluded from the tiebreak instead of crashing the sort.
-    from ..utils import orderable_columns
-
-    if order_col is not None:
-        if order_col not in snapshot.columns:
-            raise ValueError(
-                f"scd2_apply order_col {order_col!r} is not a "
-                f"snapshot column; have {snapshot.columns}"
-            )
-        if order_col in key_cols:
-            # constant within each key partition: the caller's recency
-            # intent is unsatisfiable and the survivor would be the
-            # arbitrary attr-tiebreak pick — refuse instead of
-            # silently ignoring the request (ADVICE r8)
-            raise ValueError(
-                f"scd2_apply order_col {order_col!r} is a key column — "
-                "it cannot order rows WITHIN a key; pass an "
-                "observation-time / sequence column instead"
-            )
-    # order_col is honored even with empty attr_cols (ADVICE r8: the
-    # ordering branch used to be gated on attr_cols, silently dropping
-    # the caller's recency intent when the dimension is key-only)
-    orderable = orderable_columns(snapshot, list(attr_cols)) if attr_cols else []
-    if order_col is not None:
-        ordering = [F.desc_nulls_last(order_col)] + [
-            F.asc(a) for a in orderable if a != order_col
-        ]
-    else:
-        ordering = [F.asc(a) for a in orderable]
-    if ordering:
-        w = Window.partitionBy(*key_cols).orderBy(*ordering)
-        snapshot = (
-            snapshot.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-    else:
-        snapshot = snapshot.dropDuplicates(list(key_cols))
-    # markers tell apart "key absent from that side" from "attr is
-    # null" — attrs can be legitimately null on either side; the
-    # observation time rides along as __ts so a Column snapshot_ts
-    # resolves against the snapshot even after the join
-    snap = snapshot.withColumn("__ts", ts_expr).select(
-        *key_cols,
-        *[F.col(a).alias(f"__new_{a}") for a in attr_cols],
-        "__ts",
-        F.lit(True).alias("__observed"),
-    )
-    ts = F.col("__ts")
-    j = current.withColumn("__existing", F.lit(True)).join(
-        snap, list(key_cols), "full_outer"
-    )
-    observed = F.col("__observed").isNotNull()
-    existing = F.col("__existing").isNotNull()
-    changed = existing & observed & _attrs_differ("__new_", attr_cols)
-    # unchanged current rows + rows for keys the snapshot didn't
-    # re-observe (absence is not deletion in SCD2)
-    unchanged_rows = j.filter(existing & ~changed).select(dim.columns)
-    # a snapshot observed EARLIER than the current row's own start
-    # would close it to an empty interval [from, ts<from) and open an
-    # overlapping replacement — scd2_lookup's at-most-one-match
-    # guarantee breaks and the key's interval chain is permanently
-    # corrupt. Late/out-of-order observations need the scd2_build
-    # full-rebuild path; fail loudly here (assert embedded in the
-    # consumed expression so Catalyst cannot prune it).
-    ts_ok = F.assert_true(
-        ts >= F.col("effective_from"),
-        F.lit(
-            "scd2_apply: snapshot observation time precedes the current "
-            "row's effective_from — out-of-order/late data must go "
-            "through the scd2_build full-rebuild path"
-        ),
-    )
-    closed_rows = (
-        j.filter(changed)
-        .withColumn("effective_to", F.when(ts_ok.isNull(), ts))
-        .withColumn("is_current", F.lit(False))
-        .select(dim.columns)
-    )
-    replacement_rows = j.filter(changed).select(
-        *key_cols,
-        *[F.col(f"__new_{a}").alias(a) for a in attr_cols],
-        ts.alias("effective_from"),
-        F.lit(None).cast(to_type).alias("effective_to"),
-        F.lit(True).alias("is_current"),
-        (F.col("version") + 1).alias("version"),
-    ).select(dim.columns)
-    new_keys = j.filter(observed & ~existing).select(
-        *key_cols,
-        *[F.col(f"__new_{a}").alias(a) for a in attr_cols],
-        ts.alias("effective_from"),
-        F.lit(None).cast(to_type).alias("effective_to"),
-        F.lit(True).alias("is_current"),
-        F.lit(1).cast("int").alias("version"),
-    ).select(dim.columns)
-    return (
-        history.unionByName(unchanged_rows)
-        .unionByName(closed_rows)
-        .unionByName(replacement_rows)
-        .unionByName(new_keys)
-    )
-
-
 def table_diff(
     old: DataFrame,
     new: DataFrame,
@@ -273,10 +121,8 @@ def table_diff(
                     differs null-safely);
       old_<col> / new_<col> — both images (null on the absent side).
 
-    Unchanged keys are dropped. This is the feed `scd2_apply` and the
-    incremental-rollup refresh consume between warehouse snapshots
-    (pair with sources.versioned.read_version to diff time-travel
-    snapshots).
+    Unchanged keys are dropped. Pair with sources.versioned.read_version
+    to diff time-travel snapshots.
 
     Scale: ONE full-outer hash join on the key — both sides shuffle
     once, nothing is collected, and the output is bounded by the
@@ -325,7 +171,7 @@ def scd2_lookup(
     are current-state-only, so a 2019 match joined today gets the
     team's 2024 stadium. With a Type-2 dim the same join is
     time-correct, and the guarantee is structural: a key's intervals
-    partition its timeline (scd2_build/apply construct them from
+    partition its timeline (scd2_build constructs them from
     consecutive change timestamps), so each fact matches AT MOST one
     version — empty intervals (same-timestamp change bursts) match
     nothing by the half-open predicate.

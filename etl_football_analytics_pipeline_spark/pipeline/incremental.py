@@ -1,26 +1,18 @@
-"""Incremental-extract state machine — the reference's checkpoint gate
-and raw-layer MERGE (`scr/Extract.py:104-124,222-303`) as engine
-library code.
+"""Incremental-extract checkpoint gate — the reference's
+`.last_extract_date.txt` logic (`scr/Extract.py:104-124,222-260`) as
+engine library code.
 
 Semantics reproduced:
-- a checkpoint file (`.last_extract_date.txt`) holding a non-empty
-  date string means "data exists" → extract only the CURRENT season;
-  missing/empty/unreadable checkpoint → full backfill of every season
-  (`scr/Extract.py:222-248`);
+- a checkpoint file holding a non-empty date string means "data
+  exists" → extract only the CURRENT season; missing/empty/unreadable
+  checkpoint → full backfill of every season (`scr/Extract.py:222-248`);
 - after a successful extract the checkpoint is (re)written with
-  today's date (`scr/Extract.py:252-260`);
-- each new batch MERGEs into the raw layer keyed on the table's key
-  columns — new rows replace same-key old rows, unique old rows
-  survive (`scr/Extract.py:262-303`, M1). Schema mismatch falls back
-  to new-data-only, keyless tables to append+dedup-keep-last, exactly
-  like the reference's guard paths (:279-281, :294-299).
+  today's date (`scr/Extract.py:252-260`); pipeline.runner stamps it
+  after its extract stage.
 
-Spark mapping: the MERGE is operators.merge.merge_replace (anti-join +
-unionByName — one broadcastable join instead of a pandas full rewrite)
-and the raw layer is parquet partitioned by season, so the incremental
-path rewrites ONLY the current season's partition and season-filtered
-reads get partition pruning (`scr/Extract.py`'s whole-file CSV rewrite
-can never do either; SURVEY.md §4).
+The reference's raw-layer MERGE of each fetched batch
+(`scr/Extract.py:262-303`) belongs to the out-of-engine extract
+(SURVEY §2.1, rows S6/S7): the runner starts from the raw CSVs on disk.
 """
 
 from __future__ import annotations
@@ -28,10 +20,6 @@ from __future__ import annotations
 import os
 from collections.abc import Sequence
 from datetime import date
-
-from pyspark.sql import DataFrame, SparkSession
-
-from ..operators.merge import merge_replace
 
 CHECKPOINT_NAME = ".last_extract_date.txt"
 
@@ -67,309 +55,3 @@ def seasons_to_extract(
         return [current_season]
     return list(all_seasons)
 
-
-def merge_into_raw(
-    spark: SparkSession,
-    new_df: DataFrame,
-    table_path: str,
-    key_cols: Sequence[str],
-    partition_by: str | None = "season",
-    use_manifest: bool = True,
-    retries: int = 0,
-    keep_versions: int = 1,
-    backoff_s: float = 0.05,
-) -> DataFrame:
-    """Raw-layer incremental MERGE (M1): new-wins by key tuple.
-
-    First write / schema mismatch → new data only (reference guards
-    `scr/Extract.py:268-281`); no keys → append + dedup-keep-last
-    (:294-299, stated deterministically: new batch wins). The result
-    lands partitioned by `partition_by`: full replaces commit through
-    the manifest pointer (replace_dir — durable, object-store-safe
-    since r8), and the partition-LOCAL fast path stages the delta's
-    partitions durably and swaps only those children inside the live
-    tree — only partitions present in the merged delta rewrite, and
-    the table is never truncated while the merged rows' only copy is
-    volatile.
-
-    ``use_manifest=False`` keeps full replaces on the stage-and-rename
-    swap so the table ROOT stays directly scannable by external tools
-    (`spark.read.parquet(table_path)`) — the manifest layout hides
-    data from direct reads (underscore-prefixed trees), which is the
-    right default for the engine's own resolved readers but a breaking
-    conversion for out-of-band consumers (review r8; merge_sink made
-    the same choice the other way because its target contract was
-    already direct-read). A table ALREADY converted to the manifest
-    layout stays manifest regardless — writing plain root files next
-    to a live manifest would make the new rows invisible to resolved
-    readers.
-
-    Manifest tables stay IMMUTABLE (r9, ADVICE r8): for a table already
-    converted to the manifest layout, the partition-local merge commits
-    a brand-new tree through `manifest_commit` — delta partitions are
-    written fresh, untouched partitions are HARD-LINKED from the live
-    tree (local filesystems; O(files) metadata, zero data copied) or
-    FS-copied (remote schemes) — so retained versions never mutate and
-    `read_relation_version` time travel stays sound. The in-place child
-    swap below now runs ONLY on plain-layout (never-manifest) tables,
-    where there is no version history to corrupt.
-
-    Object-store note: on S3-likes the manifest-preserving path copies
-    untouched partitions server-side (no hard links there) — correct
-    but O(table − delta) per merge; deployments where that dominates
-    should adopt a table format for the raw layer (its metadata layer
-    is exactly a cheap cross-version file-sharing mechanism).
-
-    ``retries`` (r9) makes the merge multi-writer-capable on
-    manifest-layout tables: two extract jobs racing DIFFERENT seasons
-    into one raw table collide at the commit marker, and the loser
-    recomputes the whole merge from the new live tree and retries —
-    both land serially with neither's partitions lost. Size
-    ``keep_versions`` ≥ concurrent writers + 1 (see manifest_commit's
-    retention-under-concurrency note) so a rival's commit cannot
-    vacuum the tree an in-flight rebase is still scanning — and
-    because ``retries > 0`` IS a declaration of concurrency, it
-    enforces ``keep_versions >= 2`` (r10, ADVICE r9: the old default
-    pair retries>0 + keep_versions=1 was exactly the undersized
-    retention the docstring warned about); the plain (never-manifest)
-    layout has no commit-time detection and stays single-writer
-    regardless."""
-    from ..manifest import CommitConflict, _conflict_backoff
-
-    table_path = table_path.rstrip("/")
-    if retries > 0:
-        keep_versions = max(keep_versions, 2)
-    attempt = 0
-    while True:
-        try:
-            return _merge_into_raw_once(
-                spark, new_df, table_path, key_cols, partition_by,
-                use_manifest, keep_versions,
-            )
-        except CommitConflict:
-            if attempt >= retries:
-                raise
-            _conflict_backoff(attempt, backoff_s)
-            attempt += 1
-
-
-def _merge_into_raw_once(
-    spark: SparkSession,
-    new_df: DataFrame,
-    table_path: str,
-    key_cols: Sequence[str],
-    partition_by: str | None,
-    use_manifest: bool,
-    keep_versions: int,
-) -> DataFrame:
-    from ..manifest import (
-        CommitConflict,
-        current_manifest,
-        resolved_dir,
-        tree_dir,
-    )
-    from ..utils import _clone_dir, _hadoop_fs, recover_swapped_dir
-
-    _fs, _hp = _hadoop_fs(table_path, spark)
-    # crash recovery BEFORE the existence probe: a pre-r8 run that died
-    # between its whole-dir swap renames left the table absent with the
-    # last complete copy at `.__old` — probing first would classify
-    # that as "no table yet" and the merge would silently replace all
-    # prior rows with the new batch
-    recover_swapped_dir(table_path, spark)
-    # a direct-branch full replace that crashed after its stage write
-    # leaves `table.__stage` (a full table copy) as a sibling; clean it
-    # here so it cannot leak until the next rare full-replace branch
-    _stale_stage = _hp(table_path + ".__stage")
-    if _fs.exists(_stale_stage):
-        _fs.delete(_stale_stage, True)
-    # the table's live data root: the current manifest tree once the
-    # full-replace path (replace_dir, manifest-committed since r8) has
-    # run, else the plain table dir (legacy layout). Partition children
-    # live INSIDE this root; resolved fresh on every attempt so a
-    # rebase recomputes the merge against the rival's committed tree.
-    # The manifest state is PINNED here (_base) and re-verified inside
-    # every manifest write callable: without the pin, a rival landing
-    # between this resolution and our commit would never collide (we'd
-    # target the NEXT version number) and its rows in our touched
-    # partitions would silently vanish under our stale merge.
-    _base = current_manifest(spark, table_path)
-    _root = tree_dir(table_path, *_base) if _base else table_path
-
-    def _assert_unmoved() -> None:
-        now = current_manifest(spark, table_path)
-        if now != _base:
-            raise CommitConflict(
-                f"{table_path!r} advanced from manifest {_base} to "
-                f"{now} while this merge was computing; re-read and "
-                "retry (merge_into_raw retries=N automates the rebase)"
-            )
-    if _fs.exists(_hp(_root)):
-        for st in _fs.listStatus(_hp(_root)):
-            name = st.getPath().getName()
-            if not name.endswith(".__old"):
-                continue
-            live = _hp(f"{_root.rstrip('/')}/{name[: -len('.__old')]}")
-            if not _fs.exists(live):  # mid-swap crash: restore the child
-                if not _fs.rename(st.getPath(), live):
-                    raise IOError(f"could not recover partition {name}")
-            else:  # swap completed; the retired copy is a leftover
-                _fs.delete(st.getPath(), True)
-    # existence probe through the Hadoop FS API (not os.path.isdir,
-    # which is always-false for HDFS/S3 tables and would silently turn
-    # every merge into a full replace — same defect class as the
-    # tombstone probe fixed in operators/tombstones._dir_exists)
-    _tp = _hp(_root)
-    exists = _fs.exists(_tp) and any(
-        not st.getPath().getName().startswith((".", "_"))
-        for st in _fs.listStatus(_tp)
-    )
-    partitioned = bool(partition_by) and partition_by in new_df.columns
-    # partition-local merge is sound only when the partition column is
-    # part of the merge key (a new row can then only displace old rows
-    # inside its own partition) — true for every raw table here
-    # (`scr/Extract.py:330-343`: keys are (season, ...) tuples)
-    local = partitioned and partition_by in (key_cols or ())
-
-    def _restore_partition_type(df: DataFrame) -> DataFrame:
-        # directory-name partition values come back type-inferred
-        # ("2324" → int); restore the delta's declared type so merge
-        # joins/unions and downstream readers see a stable schema
-        if partitioned and partition_by in df.columns:
-            want = dict(new_df.dtypes)[partition_by]
-            if dict(df.dtypes)[partition_by] != want:
-                return df.withColumn(partition_by, df[partition_by].cast(want))
-        return df
-
-    if not exists:
-        merged = new_df
-        local = False
-    else:
-        old_df = _restore_partition_type(spark.read.parquet(_root))
-        if set(old_df.columns) != set(new_df.columns):
-            # schema-mismatch guard: new data only — the WHOLE table is
-            # replaced (static overwrite below), like the reference's
-            # full-file rewrite
-            merged = new_df
-            local = False
-        elif key_cols and all(c in old_df.columns for c in key_cols):
-            if local:
-                # read ONLY the partitions the delta touches (partition
-                # pruning on the filter), merge within them; untouched
-                # partitions never move — the incremental path's cost is
-                # O(delta partitions), not O(table)
-                affected = [r[0] for r in new_df.select(partition_by).distinct().collect()]
-                old_df = old_df.filter(old_df[partition_by].isin(affected))
-            merged = merge_replace(old_df, new_df, list(key_cols))
-        else:
-            # keyless: old ∪ new with full-row dedup, new wins — the
-            # drop_duplicates(keep='last') fallback, made deterministic
-            local = False
-            merged = old_df.join(new_df, on=list(new_df.columns), how="left_anti").unionByName(
-                new_df.dropDuplicates()
-            )
-
-    # The merged plan READS table_path, so it must be materialized
-    # durably before table_path changes. Writing to a SIBLING temp dir
-    # and swapping by rename does that with no localCheckpoint (whose
-    # blocks live only in executor storage — an executor loss after
-    # the overwrite truncated the table would have destroyed the only
-    # copy) and no dependence on the session's partitionOverwriteMode.
-    from ..operators.tombstones import replace_dir
-
-    def _write(p: str) -> None:
-        # staleness pin: the merged plan was built against _root; if a
-        # rival committed since, writing would publish a merge that
-        # drops the rival's rows — conflict instead (the rival landing
-        # AFTER this check targets the same version we do and is caught
-        # by manifest_commit's create-then-verify, so the two checks
-        # together cover the whole window)
-        _assert_unmoved()
-        w = merged.write
-        if partitioned:
-            w = w.partitionBy(partition_by)
-        w.parquet(p)
-
-    if local and _root != table_path:
-        # manifest-converted table: the pre-r9 in-place child swap
-        # mutated the LIVE tree, breaking the immutable-tree invariant
-        # (a retained version read via read_relation_version silently
-        # showed post-merge data — ADVICE r8). Instead, commit a NEW
-        # tree: write the delta's partitions fresh, then reuse every
-        # untouched partition child from the live tree by hard link
-        # (local: O(files) metadata, no data copied; both trees point
-        # at the same immutable parquet files, and retiring either
-        # tree just unlinks) or FS copy (remote schemes — see the
-        # object-store note in the docstring). One zero-byte marker
-        # create publishes the tree; retention keeps replace semantics.
-        from ..manifest import manifest_commit
-
-        def _write_linked_tree(tree: str) -> None:
-            _write(tree)  # delta partitions + _SUCCESS (pin-checked)
-            # link untouched partitions from the PINNED base tree (not
-            # a re-resolve): the merged delta was computed against
-            # _root, and a rival landing after the pin check collides
-            # at manifest_commit's create-then-verify anyway — linking
-            # from a rival's newer tree here would mix bases
-            fresh = {
-                st.getPath().getName()
-                for st in _fs.listStatus(_hp(tree))
-            }
-            for st in _fs.listStatus(_hp(_root)):
-                name = st.getPath().getName()
-                if not name.startswith(f"{partition_by}=") or name in fresh:
-                    continue
-                _clone_dir(
-                    spark, f"{_root.rstrip('/')}/{name}", f"{tree}/{name}"
-                )
-
-        manifest_commit(
-            spark, table_path, _write_linked_tree, keep=keep_versions
-        )
-    elif local:
-        # plain-layout table (never manifest-committed — no version
-        # history to corrupt): merged holds ONLY the delta's
-        # partitions — land them durably in the sibling dir, then swap
-        # each partition child over its old copy with the SAME
-        # two-rename discipline as the whole-table path (retire to
-        # child.__old, rename the stage in, drop the retired copy —
-        # never delete-then-rename, whose crash window loses the
-        # partition); untouched partitions never move. A crash mid-swap
-        # leaves every child old, new, or retired-at-.__old — the
-        # recovery sweep at the top of this function restores the
-        # retired ones before the next merge reads the table.
-        from ..utils import commit_staged_dir
-
-        tmp = _root.rstrip("/") + ".__new"
-        tmp_p = _hp(tmp)
-        if _fs.exists(tmp_p):  # leftover from a crashed prior run
-            _fs.delete(tmp_p, True)
-        _write(tmp)
-        for st in _fs.listStatus(tmp_p):
-            name = st.getPath().getName()
-            if not name.startswith(f"{partition_by}="):
-                continue  # _SUCCESS and friends
-            commit_staged_dir(
-                f"{_root.rstrip('/')}/{name}", f"{tmp}/{name}", spark
-            )
-        _fs.delete(tmp_p, True)
-        spark.catalog.refreshByPath(table_path)
-    elif use_manifest or _root != table_path.rstrip("/"):
-        # full replace (first write, schema mismatch, keyless,
-        # non-local keys): manifest-pointer commit (object-store-safe)
-        replace_dir(spark, table_path, _write)
-    else:
-        # direct-read contract: durable sibling stage + rename swap
-        # (crash between the renames recovered by recover_swapped_dir
-        # at the top of the next merge)
-        from ..utils import commit_staged_dir
-
-        tmp = table_path + ".__stage"
-        if _fs.exists(_hp(tmp)):
-            _fs.delete(_hp(tmp), True)
-        _write(tmp)
-        commit_staged_dir(table_path, tmp, spark)
-        spark.catalog.refreshByPath(table_path)
-    return _restore_partition_type(
-        spark.read.parquet(resolved_dir(spark, table_path))
-    )

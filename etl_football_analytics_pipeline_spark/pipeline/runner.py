@@ -5,13 +5,13 @@ engine entry point anything can schedule (cron, Airflow PythonOperator,
 a systemd timer): one function, one CLI.
 
 Stage mapping:
-- extract — out-of-engine by SURVEY §2.1 (network clients aren't in
-  this container), so it's a caller-supplied callable, exactly like
-  sources.ingest models the fetch; when omitted the runner starts from
-  the raw CSVs already on disk (the DAG's behavior when Extract is
-  skipped). The checkpoint gate (pipeline.incremental.write_checkpoint,
-  the reference's `.last_extract_date.txt`) is stamped after a
-  successful extract.
+- extract — out-of-engine ingestion by SURVEY §2.1 (rows S6/S7: the
+  reference's API fetch and web scrape), so it's a caller-supplied
+  callable; when omitted the runner starts from the raw CSVs already
+  on disk (the DAG's behavior when Extract is skipped). The
+  checkpoint gate (pipeline.incremental.write_checkpoint, the
+  reference's `.last_extract_date.txt`) is stamped after a successful
+  extract.
 - transform — pipeline.football.run_pipeline (the Transform-stage DAG
   as two concurrent waves: all dims, then all facts), which writes the
   Parquet handoff under PROCESSED_DIR and returns frames over those
@@ -104,10 +104,9 @@ def run_etl(
     """Run extract → transform → load once, with per-stage retries.
 
     `extract(spark, raw_dir)` is the caller's network fetch (it should
-    land/refresh the raw CSVs in `raw_dir` — e.g. via
-    sources.ingest.ingest_table + ingest_with_raw_merge); None skips
-    the stage. Returns an EtlReport with per-stage attempts/timings
-    and per-table output row counts. The report's `ok` is the DAG's
+    land/refresh the raw CSVs in `raw_dir`); None skips the stage.
+    Returns an EtlReport with per-stage attempts/timings and per-table
+    output row counts. The report's `ok` is the DAG's
     overall success; a failed stage short-circuits the chain."""
     from .football import run_pipeline
     from .incremental import write_checkpoint

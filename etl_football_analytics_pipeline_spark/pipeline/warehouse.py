@@ -31,7 +31,7 @@ import os
 from collections.abc import Sequence
 from functools import partial
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 # warehouse table → (primary key, is_dimension)
@@ -218,51 +218,3 @@ def write_warehouse(
         spark, {name: partial(load, name, df) for name, df in warehouse.items()}
     )
 
-
-def write_dim_scd2(
-    spark: SparkSession,
-    table_dir: str,
-    snapshot: DataFrame,
-    pk: Sequence[str],
-    attr_cols: Sequence[str],
-    snapshot_ts,
-    keep_versions: int = 5,
-) -> DataFrame:
-    """Load one dimension snapshot as SCD TYPE-2 history instead of
-    the reference's overwrite-in-place upsert (`scr/Load.py:79-89`
-    loses every prior attribute state): changed keys close their
-    current row and open a new version, new keys open at version 1,
-    unobserved keys pass through — operators.scd.scd2_apply, ONE
-    full-outer join per load.
-
-    The history table itself commits through the snapshot layer
-    (atomic pointer swap, time travel, vacuum-bounded), so the load
-    is crash-safe AND the dimension carries its own effective_from/to
-    timeline: `WHERE is_current` is the reference's old view, an
-    as-of join against (effective_from, effective_to] reconstructs
-    any past state. Returns the updated history frame."""
-    from ..operators.scd import scd2_apply
-    from ..sources.versioned import commit_version, current_version, read_latest, vacuum
-
-    ts = snapshot_ts if isinstance(snapshot_ts, Column) else F.lit(snapshot_ts)
-    if current_version(table_dir) is None:
-        dim = snapshot.select(
-            *pk,
-            *attr_cols,
-            # cast BOTH interval bounds: a string snapshot_ts would
-            # otherwise commit a permanently string-typed
-            # effective_from (breaking as-of comparisons and flipping
-            # the column type when a later load passes a datetime)
-            ts.cast("timestamp").alias("effective_from"),
-            F.lit(None).cast("timestamp").alias("effective_to"),
-            F.lit(True).alias("is_current"),
-            F.lit(1).cast("int").alias("version"),
-        )
-    else:
-        dim = scd2_apply(
-            read_latest(spark, table_dir), snapshot, list(pk), list(attr_cols), ts
-        )
-    commit_version(dim, table_dir)
-    if keep_versions > 0:
-        vacuum(table_dir, keep=keep_versions)
-    return read_latest(spark, table_dir)

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 
@@ -25,7 +26,13 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or get) a SparkSession with the engine's standard config."""
+    """Build (or get) a SparkSession with the engine's standard config.
+
+    When a SparkContext is already running, `getOrCreate()` returns its
+    session and only runtime SQL confs take effect; every other
+    `extra_conf` entry (e.g. `spark.eventLog.*`) would be dropped
+    silently. Raises RuntimeError naming each such key whose value the
+    running context does not already hold."""
     # spark.executorEnv.* does NOT apply in local mode — python workers
     # fork from the driver-launched JVM and inherit ITS environment, so
     # the single-BLAS-thread policy must be in os.environ before the
@@ -81,6 +88,20 @@ def get_spark(
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")
         .config("spark.executorEnv.MKL_NUM_THREADS", "1")
     )
-    for k, v in (extra_conf or {}).items():
+    extra_conf = extra_conf or {}
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    reused = SparkContext._active_spark_context is not None
+    spark = builder.getOrCreate()
+    if reused:
+        held = spark.sparkContext.getConf()
+        dropped = sorted(
+            k for k, v in extra_conf.items()
+            if not spark.conf.isModifiable(k) and held.get(k) != v
+        )
+        if dropped:
+            raise RuntimeError(
+                f"get_spark: a SparkContext is already running, so "
+                f"{dropped} cannot take effect; stop it first"
+            )
+    return spark

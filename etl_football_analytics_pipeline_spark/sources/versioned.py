@@ -466,7 +466,7 @@ def vacuum(table_dir: str, keep: int = 2) -> list[int]:
     dropped version numbers. Never touches the live version.
 
     Deletions RAISE on failure (a version reported dropped is
-    verifiably gone — forget_keys_hard's "rows exist nowhere on disk"
+    verifiably gone — a hard erasure's "rows exist nowhere on disk"
     contract rests on this; a swallowed rmtree error would report
     erasure that did not happen). Local: directories numbered ABOVE
     the live pointer are a crashed commit's unpublished staging data,
@@ -625,8 +625,7 @@ def _data_file_names(spark, d: str) -> list[str]:
             raise ValueError(
                 f"versioned CoW commit: {d!r} contains a partition "
                 f"subdirectory ({name!r}) this layout never writes — "
-                "use file_reuse=False (full rewrite) or the manifest "
-                "layout's partition-aware merge_into_raw"
+                "use file_reuse=False (full rewrite)"
             )
         out.append(name)
     return out
@@ -1060,8 +1059,7 @@ def delete_commit(
     readers (pointer flip).
 
     Downstream propagation needs no special machinery: the deleted
-    keys surface as 'delete' rows in `snapshot_diff(N, N+1)`, which
-    `rollup_apply_cdc` and SCD2 capture already fold exactly.
+    keys surface as 'delete' rows in `snapshot_diff(N, N+1)`.
 
     `doomed` carries just the key columns (extra columns are ignored);
     at scale the anti-join is one hash shuffle on the keys, or a
@@ -1078,8 +1076,8 @@ def delete_commit(
     O(churn) per attempt. Hard-erasure semantics are preserved: the
     doomed rows' files are exactly the rewritten (never linked) ones,
     so once ``vacuum`` retires the old version dir their inodes' last
-    links are gone — `forget_keys_hard`'s rows-nowhere-on-disk
-    contract is unchanged."""
+    links are gone — the rows-nowhere-on-disk contract is
+    unchanged."""
     attempt = 0
     while True:
         v = current_version(table_dir)

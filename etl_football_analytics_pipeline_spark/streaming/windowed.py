@@ -168,49 +168,21 @@ def rollup_time(
 
 
 def _finest_partials(events: DataFrame, resolution: str, ts: str, key: str) -> DataFrame:
-    """Hourly-tier partials: (bucket, key, n_events, __nv, __v) —
-    `__v` is the exact decimal sum kept INTERNAL so coarser tiers (and
-    incremental refreshes) re-aggregate losslessly; the double cast
-    happens only at the public output boundary. `__nv` counts the
-    NON-NULL values in the cell: `__v` is NULL exactly when
-    `__nv = 0` (SQL SUM over nothing), and CDC retractions need the
-    count to restore that state — a cell whose real values were all
-    retracted folds its decimal partial to 0.00, which must read back
-    as NULL to stay bit-for-bit with a fresh re-init."""
+    """Hourly-tier partials: (bucket, key, n_events, __v) — `__v` is
+    the exact decimal sum kept INTERNAL so coarser tiers re-aggregate
+    losslessly; the double cast happens only at the public output
+    boundary. `__v` is NULL where the cell holds no non-null value
+    (SQL SUM over nothing), and stays so up the tiers."""
     return events.groupBy(F.date_trunc(resolution, F.col(ts)).alias("bucket"), key).agg(
         F.count(F.lit(1)).alias("n_events"),
-        F.count(F.col("value")).alias("__nv"),
         # exact order-independent partial (see tumbling_agg)
         exact_scaled_sum(scaled_long("value"), 2).alias("__v"),
     )
 
 
-def _merge_finest(old_fin: DataFrame, delta_fin: DataFrame, key: str) -> DataFrame:
-    """Fold delta partials into stored finest-tier partials: union +
-    one partial-sized re-group, then normalize `__v` to NULL where no
-    non-null value survives (`__nv = 0`) so merged state is
-    indistinguishable from a fresh re-aggregation. Shared by
-    rollup_refresh (sign=+1 deltas only) and rollup_apply_cdc (signed
-    retract/add deltas)."""
-    return (
-        old_fin.unionByName(delta_fin)
-        .groupBy("bucket", key)
-        .agg(
-            F.sum("n_events").alias("n_events"),
-            F.sum("__nv").cast("long").alias("__nv"),
-            F.sum("__v").cast("decimal(18,2)").alias("__v"),
-        )
-        .withColumn("__v", F.when(F.col("__nv") > 0, F.col("__v")))
-    )
-
-
-_FINEST_COLS = ("bucket", "n_events", "__nv", "__v")
-
-
 def _cascade(finest: DataFrame, resolutions: tuple[str, ...], key: str) -> DataFrame:
     """Re-aggregate the finest-tier partials up the resolution ladder
-    and union all tiers as (resolution, bucket, key, n_events, __nv,
-    __v)."""
+    and union all tiers as (resolution, bucket, key, n_events, __v)."""
     tiers = [finest]
     for res in resolutions[1:]:
         tiers.append(
@@ -218,7 +190,6 @@ def _cascade(finest: DataFrame, resolutions: tuple[str, ...], key: str) -> DataF
             .groupBy(F.date_trunc(res, F.col("bucket")).alias("bucket"), key)
             .agg(
                 F.sum("n_events").alias("n_events"),
-                F.sum("__nv").cast("long").alias("__nv"),
                 F.sum("__v").cast("decimal(18,2)").alias("__v"),
             )
         )
@@ -229,97 +200,10 @@ def _cascade(finest: DataFrame, resolutions: tuple[str, ...], key: str) -> DataF
             "bucket",
             key,
             F.col("n_events").cast("long").alias("n_events"),
-            "__nv",
             "__v",
         )
         out = leg if out is None else out.unionByName(leg)
     return out
-
-
-def rollup_init(events: DataFrame, table_dir: str, *,
-                resolutions: tuple[str, ...] = ROLLUP_TIERS,
-                ts: str = "ts", key: str = "event_type") -> int:
-    """Materialize the full multi-resolution rollup of `events` as a
-    snapshot-versioned table (sources/versioned.py) and return the
-    committed version. The stored schema keeps the internal exact
-    decimal partial (`__v`) so later `rollup_refresh` calls fold new
-    data losslessly; read it back through `read_rollup`."""
-    from ..sources.versioned import commit_version
-
-    finest = _finest_partials(events, resolutions[0], ts, key).persist()
-    try:
-        return commit_version(_cascade(finest, resolutions, key), table_dir)
-    finally:
-        finest.unpersist()
-
-
-def _with_nv(old: DataFrame) -> DataFrame:
-    """Migration shim for rollup tables committed before the `__nv`
-    partial existed (pre-r7 schema): backfill the non-null-value count
-    on READ instead of failing the first incremental refresh with an
-    AnalysisException and no migration path (ADVICE r7). The old
-    schema could not represent partially-null cells, so the faithful
-    reconstruction is exactly its own invariant: `__v IS NULL` ⇔ no
-    non-null values (0), else every event counted (n_events). Tables
-    written since carry the true count and pass through untouched."""
-    if "__nv" in old.columns:
-        return old
-    return old.withColumn(
-        "__nv",
-        F.when(F.col("__v").isNull(), F.lit(0))
-        .otherwise(F.col("n_events"))
-        .cast("long"),
-    )
-
-
-def rollup_refresh(spark, table_dir: str, new_events: DataFrame, *,
-                   resolutions: tuple[str, ...] = ROLLUP_TIERS,
-                   ts: str = "ts", key: str = "event_type") -> int:
-    """Fold a micro-batch into the persisted rollup WITHOUT re-scanning
-    historical raw data — the continuous-aggregate refresh:
-
-    1. aggregate the batch to finest-tier partials (the only work
-       proportional to the batch);
-    2. merge them into the stored finest tier (union + re-group — the
-       rollup table holds one row per (bucket, key), so this shuffle is
-       partial-sized, orders of magnitude below the raw table);
-    3. re-derive the coarser tiers from the merged finest partials and
-       commit the result as a NEW snapshot version (readers keep
-       snapshot isolation; a crash leaves the previous version live).
-
-    Counts and decimal partials are associative, so
-    init(b1) + refresh(b2) ≡ init(b1 ∪ b2) exactly (asserted in
-    tests/test_interval.py). Exactly-once is the caller's contract:
-    fold each batch once (foreachBatch epoch gating — the same
-    contract as pipeline/llm_corpus.curation_sink).
-    """
-    from ..sources.versioned import commit_version, read_latest
-
-    old = _with_nv(read_latest(spark, table_dir))
-    old_fin = old.filter(F.col("resolution") == resolutions[0]).select(
-        "bucket", key, "n_events", "__nv", "__v"
-    )
-    delta_fin = _finest_partials(new_events, resolutions[0], ts, key)
-    merged_fin = _merge_finest(old_fin, delta_fin, key).persist()
-    try:
-        return commit_version(_cascade(merged_fin, resolutions, key), table_dir)
-    finally:
-        merged_fin.unpersist()
-
-
-def read_rollup(spark, table_dir: str, key: str = "event_type") -> DataFrame:
-    """Public view of a persisted rollup: the internal decimal partial
-    becomes `total_value` (double at the output boundary, matching
-    `rollup_time`'s live schema)."""
-    from ..sources.versioned import read_latest
-
-    return read_latest(spark, table_dir).select(
-        "resolution",
-        "bucket",
-        key,
-        "n_events",
-        F.col("__v").cast("double").alias("total_value"),
-    )
 
 
 def gapfill_time(
@@ -627,71 +511,3 @@ def merge_sink(
 
     return apply
 
-
-def rollup_apply_cdc(spark, table_dir: str, changes: DataFrame, *,
-                     resolutions: tuple[str, ...] = ROLLUP_TIERS,
-                     ts: str = "ts", key: str = "event_type",
-                     value: str = "value") -> int:
-    """Fold a CDC change feed (operators.scd.table_diff output over the
-    raw events: change_type + old_/new_ images of ts, key, value) into
-    the persisted rollup — UPDATE- and DELETE-aware refresh, where
-    `rollup_refresh` handles appends only.
-
-    Count and exact-decimal-sum partials form an abelian group, so a
-    change is two signed contributions:
-      delete / update-old : (-1, -value) at bucket(old ts, old key)
-      insert / update-new : (+1, +value) at bucket(new ts, new key)
-    An update that moves an event across buckets (ts edit) or keys
-    retracts from the old cell and adds to the new one; emptied cells
-    (n_events folds to 0) are dropped. Coarser tiers re-derive from
-    the merged finest partials exactly as in rollup_refresh, and the
-    result commits as a new snapshot version.
-
-    Equivalence contract: init(v1) + apply_cdc(diff(v1, v2)) ≡
-    init(v2) bit-for-bit (asserted in tests/test_interval.py). Work is
-    proportional to |changes| + |rollup partials| — historical raw
-    data is never re-scanned, which at 100 TB is the entire point of
-    maintaining the rollup through the change feed instead of
-    recomputing it.
-    """
-    from ..sources.versioned import commit_version, read_latest
-
-    retract = changes.filter(F.col("change_type").isin("delete", "update")).select(
-        F.col(f"old_{ts}").alias(ts),
-        F.col(f"old_{key}").alias(key),
-        F.col(f"old_{value}").alias(value),
-        F.lit(-1).alias("__sign"),
-    )
-    add = changes.filter(F.col("change_type").isin("insert", "update")).select(
-        F.col(f"new_{ts}").alias(ts),
-        F.col(f"new_{key}").alias(key),
-        F.col(f"new_{value}").alias(value),
-        F.lit(1).alias("__sign"),
-    )
-    delta_fin = (
-        retract.unionByName(add)
-        .groupBy(F.date_trunc(resolutions[0], F.col(ts)).alias("bucket"), key)
-        .agg(
-            F.sum("__sign").alias("n_events"),
-            # signed non-null-value count: retracting a real value must
-            # decrement it so a cell left with only NULL-valued events
-            # reads back __v = NULL, exactly like a fresh re-init
-            F.sum(
-                F.when(F.col(value).isNotNull(), F.col("__sign")).otherwise(0)
-            ).alias("__nv"),
-            exact_scaled_sum(scaled_long(value) * F.col("__sign"), 2).alias("__v"),
-        )
-    )
-    old = _with_nv(read_latest(spark, table_dir))
-    old_fin = old.filter(F.col("resolution") == resolutions[0]).select(
-        "bucket", key, "n_events", "__nv", "__v"
-    )
-    merged_fin = (
-        _merge_finest(old_fin, delta_fin, key)
-        .filter(F.col("n_events") != 0)  # emptied cells drop
-        .persist()
-    )
-    try:
-        return commit_version(_cascade(merged_fin, resolutions, key), table_dir)
-    finally:
-        merged_fin.unpersist()

@@ -222,26 +222,6 @@ def quality_section(spark, scale: int) -> str:
     t0 = time.time()
     n_cdc = table_diff(old, new, ["event_id"], ["value"]).count()
     t_cdc = time.time() - t0
-    # CDC-driven rollup maintenance: init on the amplified events, then
-    # fold a full change feed (drops + value bumps) — work is
-    # |changes| + |partials|, never a raw re-scan
-    import tempfile
-
-    from etl_football_analytics_pipeline_spark.streaming.windowed import (
-        rollup_apply_cdc,
-        rollup_init,
-    )
-
-    ev2 = ev.filter(F.col("event_id") % 7 != 0).withColumn(
-        "value",
-        F.when(F.col("event_id") % 5 == 0, F.col("value") + 1).otherwise(F.col("value")),
-    )
-    with tempfile.TemporaryDirectory() as td:
-        rollup_init(ev, f"{td}/rollup")
-        ch = table_diff(ev, ev2, ["event_id"], ["ts", "event_type", "value"])
-        t0 = time.time()
-        rollup_apply_cdc(spark, f"{td}/rollup", ch)
-        t_rcdc = time.time() - t0
     docs = amplify_docs(load_table(spark, SF, "documents"), scale).cache()
     nd = docs.count()
     t0 = time.time()
@@ -364,7 +344,7 @@ def quality_section(spark, scale: int) -> str:
     docs.unpersist()
     return (
         f"events={n_ev:8d} docs={nd:7d}  scd2={t_scd:5.1f}s (rows={n_scd})  "
-        f"cdc={t_cdc:5.1f}s (changes={n_cdc})  rollup_cdc={t_rcdc:5.1f}s  chunk={t_chunk:5.1f}s (chunks={n_chunk})  "
+        f"cdc={t_cdc:5.1f}s (changes={n_cdc})  chunk={t_chunk:5.1f}s (chunks={n_chunk})  "
         f"strat={t_strat:5.1f}s (rows={n_strat})  dq={t_dq:5.1f}s (rules={rep})  "
         f"fuzzy={t_fuzzy:5.1f}s (pairs={n_fuzzy})  strip={t_strip:5.1f}s  "
         f"semdedup={t_sem:5.1f}s (kept={n_sem})  "
@@ -694,109 +674,6 @@ def pairs_section(spark, scale: int) -> str:
     )
 
 
-def skew_section(spark, scale: int) -> str:
-    """Skew mitigation under a 90%-hot key at scale× (VERDICT r8 #3):
-    100k×scale fact rows where key 0 owns 90% of them, joined to a
-    100k-key dim held ABOVE the broadcast threshold (broadcast
-    disabled for every leg — the regime `operators.skew.salted_join`
-    exists for; a broadcastable dim needs no salting). Three legs:
-
-    - join_aqe: plain shuffle join with the session's AQE skew split
-      active — what Spark's own runtime mitigation achieves;
-    - join_blown: the same join with AQE's skew split disabled — the
-      unmitigated baseline where ONE reducer owns 90% of the build
-      side (models the shapes AQE cannot split: stream-static joins,
-      plans under required distributions);
-    - join_salted: `salted_join(salts=32)` — the hot key spread over
-      32 shuffle partitions, dim replicated ×32.
-
-    Plus the aggregate-side pair on the same skewed frame:
-    - cd_spread: `distinct_count_skew_safe` (dedupe on (key, value)
-      first — hot key's values hash across ALL partitions);
-    - cd_expand: a deliberately expanded two-distinct aggregate
-      (`countDistinct(value), countDistinct(value2)`), whose Expand
-      plan funnels the hot key through single reducers.
-
-    All legs count the identical result (asserted equal) — only the
-    shuffle layout differs, so wall deltas are pure skew cost."""
-    import os as _os
-
-    from etl_football_analytics_pipeline_spark.operators.skew import (
-        distinct_count_skew_safe,
-        salted_join,
-    )
-
-    n = 100_000 * scale
-    keys = 100_000
-    fact = spark.range(n).select(
-        F.when(F.col("id") % 10 < 9, F.lit(0))
-        .otherwise(F.pmod(F.xxhash64("id"), F.lit(keys)))
-        .cast("long")
-        .alias("k"),
-        F.col("id").alias("v"),
-        F.pmod(F.col("id"), F.lit(97)).alias("v2"),
-    )
-    dim = spark.range(keys).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("dim_v")
-    )
-    prev_bcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    prev_skew = spark.conf.get("spark.sql.adaptive.skewJoin.enabled")
-    out = []
-
-    # per-row downstream work rides the join's output partitioning
-    # (projection/feature cost — what skew actually burns at 100 TB;
-    # a bare count() hides it because counting 9M rows in one task is
-    # sub-second). The checksum doubles as cross-leg row verification.
-    def checksum(joined) -> tuple[int, int]:
-        row = joined.select(
-            # decimal sum: 10M × ±2^63 overflows BIGINT under ANSI
-            F.sum(F.xxhash64("k", "v", "dim_v").cast("decimal(38,0)")).alias("chk"),
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.length(F.sha2(F.concat_ws(":", "k", "v", "dim_v"), 256))).alias("w"),
-        ).collect()[0]
-        return row.chk, row.n
-
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        t0 = time.time()
-        c_aqe = checksum(fact.join(dim, "k"))
-        out.append(f"join_aqe={time.time() - t0:6.1f}s")
-        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-        t0 = time.time()
-        c_blown = checksum(fact.join(dim, "k"))
-        out.append(f"join_blown={time.time() - t0:6.1f}s")
-        t0 = time.time()
-        c_salt = checksum(salted_join(fact, dim, ["k"], salts=32))
-        out.append(f"join_salted={time.time() - t0:6.1f}s")
-        assert c_aqe == c_blown == c_salt == (c_aqe[0], n), (c_aqe, c_blown, c_salt)
-        t0 = time.time()
-        r_spread = {
-            r.k: r.n_distinct
-            for r in distinct_count_skew_safe(fact, "k", "v").filter(
-                F.col("k") == 0
-            ).collect()
-        }
-        out.append(f"cd_spread={time.time() - t0:6.1f}s")
-        t0 = time.time()
-        r_expand = {
-            r.k: r.nd
-            for r in fact.groupBy("k")
-            .agg(
-                F.countDistinct("v").alias("nd"),
-                F.countDistinct("v2").alias("nd2"),
-            )
-            .filter(F.col("k") == 0)
-            .collect()
-        }
-        out.append(f"cd_expand={time.time() - t0:6.1f}s")
-        assert r_spread == r_expand, "distinct counts diverged"
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bcast)
-        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", prev_skew)
-    out.append(f"rows={n}  load={_os.getloadavg()[0]:.1f}")
-    return "  ".join(out)
-
-
 def commits_section(spark, scale: int) -> str:
     """Commit-machinery scaling (r9; +CoW merge r11): against a
     100k×scale-row relation of ~130B incompressible rows, time
@@ -1107,11 +984,6 @@ def main() -> int:
     if "--commits" in flags:
         for scale in (1, k):
             print(f"scale={scale:3d}  {commits_section(spark, scale)}", flush=True)
-        spark.stop()
-        return 0
-    if "--skew" in flags:
-        for scale in (1, k):
-            print(f"scale={scale:3d}  {skew_section(spark, scale)}", flush=True)
         spark.stop()
         return 0
     if "--indexed" in flags:

@@ -4,9 +4,9 @@ The engine's materialization points use `localCheckpoint()` — whose
 blocks the ContextCleaner releases when the frame is garbage-collected
 — never bare `.cache()`, whose CacheManager entry outlives the call and
 accumulates executor storage across a long-lived session (the leak
-class a prior review flagged at eight sites). These tests pin the
-contract mechanically: after running each formerly-leaking query (and a
-couple of library ops), the session's CacheManager is empty.
+class a prior review flagged at eight sites). This test pins the
+contract mechanically: after running each formerly-leaking query, the
+session's CacheManager is empty.
 """
 
 from __future__ import annotations
@@ -42,34 +42,3 @@ def test_registry_queries_leave_no_cached_frames(spark):
     for name in FORMERLY_LEAKING:
         QUERIES[name](spark, SF).collect()
         assert _cache_empty(spark), f"{name} left a CacheManager entry"
-
-
-def test_quarantine_scan_and_incremental_merge_release_storage(spark, tmp_path):
-    from etl_football_analytics_pipeline_spark.pipeline.incremental import merge_into_raw
-    from etl_football_analytics_pipeline_spark.sources.jsonl import (
-        read_jsonl,
-        split_corrupt,
-    )
-
-    spark.catalog.clearCache()  # see test above: isolate from fixture caches
-    p = tmp_path / "rows.jsonl"
-    p.write_text('{"a": 1}\n{"a": 2}\nnot json\n')
-    good, bad = split_corrupt(read_jsonl(spark, str(p), "a long"))
-    assert good.count() == 2 and bad.count() == 1
-    assert _cache_empty(spark)
-
-    tgt = str(tmp_path / "tbl")
-    df = spark.createDataFrame([(1, "x"), (2, "y")], "k long, v string")
-    merge_into_raw(spark, df, tgt, ["k"], partition_by=None)
-    merge_into_raw(
-        spark,
-        spark.createDataFrame([(2, "z")], "k long, v string"),
-        tgt,
-        ["k"],
-        partition_by=None,
-    )
-    from etl_football_analytics_pipeline_spark.manifest import read_relation
-
-    got = {r.k: r.v for r in read_relation(spark, tgt).collect()}
-    assert got == {1: "x", 2: "z"}
-    assert _cache_empty(spark)

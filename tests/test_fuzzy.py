@@ -205,3 +205,18 @@ def test_hot_key_salting_preserves_pair_set(spark):
     )
     jkey = lambda r: (r.left_id, r.right_id)  # noqa: E731
     assert sorted(j_salt.collect(), key=jkey) == sorted(j_plain.collect(), key=jkey)
+
+
+def test_hot_key_predicate_flags_exactly_the_hot_keys(spark):
+    """The literal hot-key test matches (__bidx, __bkey) pairs, not
+    either column alone: key "a" is hot in block 0 only."""
+    from etl_football_analytics_pipeline_spark.operators.fuzzy import _hot_pred
+
+    keyed = spark.createDataFrame(
+        [(0, "a")] * 4 + [(0, "b")] * 2 + [(1, "a")] + [(1, "c")] * 3,
+        "__bidx int, __bkey string",
+    )
+    pred, fallback = _hot_pred([keyed], hot_block_min=3)
+    assert fallback is None
+    got = {(r["__bidx"], r["__bkey"]) for r in keyed.filter(pred).collect()}
+    assert got == {(0, "a"), (1, "c")}

@@ -1,18 +1,12 @@
-"""Incremental-extract state machine tests (pipeline/incremental.py):
-checkpoint gate, raw-layer MERGE semantics incl. the reference's guard
-paths, partition-local rewrite, and idempotency (running a merge twice
-is a no-op — the invariant the reference claims for its raw layer)."""
+"""Incremental-extract checkpoint gate (pipeline/incremental.py):
+missing, empty and stamped checkpoints."""
 
 from __future__ import annotations
 
 import os
 from datetime import date
 
-import pytest
-
-from etl_football_analytics_pipeline_spark.manifest import resolved_dir
 from etl_football_analytics_pipeline_spark.pipeline.incremental import (
-    merge_into_raw,
     read_checkpoint,
     seasons_to_extract,
     write_checkpoint,
@@ -33,258 +27,3 @@ def test_checkpoint_gate(tmp_path):
     stamp = write_checkpoint(raw, date(2026, 8, 13))
     assert stamp == "2026-08-13" and read_checkpoint(raw) == stamp
     assert seasons_to_extract(raw, ALL, "2425") == ["2425"]
-
-
-def _rows(df):
-    return sorted((r.season, r.game, r.v) for r in df.collect())
-
-
-@pytest.fixture
-def base(spark):
-    return spark.createDataFrame(
-        [("2324", "g1", 1), ("2324", "g2", 2), ("2425", "g3", 3)],
-        "season string, game string, v int",
-    )
-
-
-def test_merge_first_write_then_keyed_replace(spark, base, tmp_path):
-    path = str(tmp_path / "t")
-    out = merge_into_raw(spark, base, path, ["season", "game"])
-    assert _rows(out) == [("2324", "g1", 1), ("2324", "g2", 2), ("2425", "g3", 3)]
-
-    delta = spark.createDataFrame(
-        [("2425", "g3", 30), ("2425", "g4", 40)], "season string, game string, v int"
-    )
-    out = merge_into_raw(spark, delta, path, ["season", "game"])
-    # g3 replaced (new wins), g4 appended, old-season rows untouched
-    expected = [
-        ("2324", "g1", 1), ("2324", "g2", 2), ("2425", "g3", 30), ("2425", "g4", 40)
-    ]
-    assert _rows(out) == expected
-    # idempotent: same delta again changes nothing (collect the fresh
-    # handle — `out`'s file listing was replaced by the re-merge)
-    again = merge_into_raw(spark, delta, path, ["season", "game"])
-    assert _rows(again) == expected
-
-
-def test_merge_is_partition_local(spark, base, tmp_path):
-    """The 2425 delta must not rewrite the 2324 partition's files.
-
-    Since r9 a manifest-converted table's partition-local merge commits
-    a NEW immutable tree (ADVICE r8: the old in-place child swap
-    mutated retained versions), reusing untouched partitions by hard
-    link — so the check is by inode: the 2324 files in the new tree
-    are literally the same inodes as before, zero bytes copied."""
-    path = str(tmp_path / "t")
-    merge_into_raw(spark, base, path, ["season", "game"])
-    # partition children live inside the live manifest tree since r8
-    old_tree = resolved_dir(spark, path)
-    part_2324 = os.path.join(old_tree, "season=2324")
-    before = {f: os.stat(os.path.join(part_2324, f)).st_ino
-              for f in os.listdir(part_2324) if f.endswith(".parquet")}
-    delta = spark.createDataFrame([("2425", "g9", 9)], "season string, game string, v int")
-    merge_into_raw(spark, delta, path, ["season", "game"])
-    new_tree = resolved_dir(spark, path)
-    assert new_tree != old_tree  # a fresh immutable tree, not a mutation
-    part_2324 = os.path.join(new_tree, "season=2324")
-    after = {f: os.stat(os.path.join(part_2324, f)).st_ino
-             for f in os.listdir(part_2324) if f.endswith(".parquet")}
-    assert before == after  # same file names, same inodes — never rewritten
-
-
-def test_merge_schema_mismatch_replaces_table(spark, base, tmp_path):
-    path = str(tmp_path / "t")
-    merge_into_raw(spark, base, path, ["season", "game"])
-    reshaped = spark.createDataFrame(
-        [("2425", "g3", 30, "x")], "season string, game string, v int, extra string"
-    )
-    out = merge_into_raw(spark, reshaped, path, ["season", "game"])
-    assert out.count() == 1 and "extra" in out.columns
-    # old-schema partitions are gone, not orphaned
-    assert sorted(r.season for r in out.select("season").collect()) == ["2425"]
-
-
-def test_merge_keyless_appends_and_dedups(spark, tmp_path):
-    path = str(tmp_path / "t")
-    a = spark.createDataFrame([("2324", "g1", 1)], "season string, game string, v int")
-    merge_into_raw(spark, a, path, key_cols=[])
-    b = spark.createDataFrame(
-        [("2324", "g1", 1), ("2425", "g9", 9)], "season string, game string, v int"
-    )
-    out = merge_into_raw(spark, b, path, key_cols=[])
-    assert _rows(out) == [("2324", "g1", 1), ("2425", "g9", 9)]
-
-
-def test_merge_recovers_whole_table_crash_before_probing(spark, base, tmp_path):
-    """A crash between the full-replace swap's two renames leaves the
-    table absent with the last copy at `.__old`. The next merge must
-    recover it BEFORE the existence probe — probing first would
-    classify the state as "no table yet" and silently replace all
-    prior rows with the new batch."""
-    path = str(tmp_path / "t")
-    merge_into_raw(spark, base, path, ["season", "game"])
-    os.rename(path, path + ".__old")  # the between-renames crash state
-    delta = spark.createDataFrame(
-        [("2425", "g3", 30)], "season string, game string, v int"
-    )
-    out = merge_into_raw(spark, delta, path, ["season", "game"])
-    assert _rows(out) == [
-        ("2324", "g1", 1), ("2324", "g2", 2), ("2425", "g3", 30)
-    ]
-    assert not os.path.exists(path + ".__old")
-
-
-def test_merge_recovers_partition_child_crash(spark, base, tmp_path):
-    """A crash between a partition child's two renames leaves that
-    partition absent with its last copy at `season=X.__old` inside the
-    table; the recovery sweep must restore it so the merge sees the
-    old rows (deleting it as a leftover would lose the partition)."""
-    path = str(tmp_path / "t")
-    merge_into_raw(spark, base, path, ["season", "game"])
-    child = os.path.join(resolved_dir(spark, path), "season=2425")
-    os.rename(child, child + ".__old")  # mid-child-swap crash state
-    delta = spark.createDataFrame(
-        [("2425", "g4", 40)], "season string, game string, v int"
-    )
-    out = merge_into_raw(spark, delta, path, ["season", "game"])
-    assert _rows(out) == [
-        ("2324", "g1", 1), ("2324", "g2", 2),
-        ("2425", "g3", 3), ("2425", "g4", 40),
-    ]
-    assert not os.path.exists(child + ".__old")
-
-
-def test_merge_use_manifest_false_keeps_direct_read_layout(spark, base, tmp_path):
-    """use_manifest=False: the table root stays directly scannable by
-    external tools across full replaces (schema change), instead of
-    converting to the manifest layout (review r8)."""
-    path = str(tmp_path / "t")
-    merge_into_raw(spark, base, path, ["season", "game"], use_manifest=False)
-    assert resolved_dir(spark, path) == path  # no manifest created
-    # direct read works — the out-of-band consumer contract
-    assert spark.read.parquet(path).count() == base.count()
-    reshaped = spark.createDataFrame(
-        [("2425", "g3", 30, "x")],
-        "season string, game string, v int, extra string",
-    )
-    out = merge_into_raw(
-        spark, reshaped, path, ["season", "game"], use_manifest=False
-    )
-    assert out.count() == 1 and "extra" in out.columns
-    assert resolved_dir(spark, path) == path
-    assert spark.read.parquet(path).count() == 1
-
-
-def test_merge_manifest_table_stays_manifest_despite_flag(spark, base, tmp_path):
-    """A table already committed through the manifest must NOT gain
-    plain root files when a caller later passes use_manifest=False —
-    resolved readers would never see them."""
-    path = str(tmp_path / "t")
-    merge_into_raw(spark, base, path, ["season", "game"])  # manifest layout
-    assert resolved_dir(spark, path) != path
-    reshaped = spark.createDataFrame(
-        [("2425", "g3", 30, "x")],
-        "season string, game string, v int, extra string",
-    )
-    out = merge_into_raw(
-        spark, reshaped, path, ["season", "game"], use_manifest=False
-    )
-    assert out.count() == 1
-    assert resolved_dir(spark, path) != path  # still manifest
-
-
-def test_merge_into_raw_threaded_disjoint_seasons(spark, tmp_path):
-    """Multi-writer raw layer (r9): two threads merge DIFFERENT seasons
-    into one manifest table with retries — the loser of each commit
-    race recomputes its merge from the winner's tree, so every season
-    partition lands with no silent loss. keep_versions=3 per the
-    retention-under-concurrency rule (a rival's commit must not vacuum
-    the tree an in-flight rebase still scans)."""
-    import threading
-
-    path = str(tmp_path / "t")
-    seed = spark.createDataFrame(
-        [("2021", "g0", 0)], "season string, game string, v int"
-    )
-    merge_into_raw(spark, seed, path, ["season", "game"])
-    errors = []
-
-    def writer(season: str):
-        try:
-            for i in range(2):
-                delta = spark.createDataFrame(
-                    [(season, f"g{season}_{i}", i)],
-                    "season string, game string, v int",
-                )
-                merge_into_raw(
-                    spark, delta, path, ["season", "game"],
-                    retries=10, keep_versions=3,
-                )
-        except Exception as exc:  # noqa: BLE001
-            errors.append(exc)
-
-    threads = [
-        threading.Thread(target=writer, args=("2324",)),
-        threading.Thread(target=writer, args=("2425",)),
-    ]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    assert not errors, errors
-    from etl_football_analytics_pipeline_spark.manifest import read_relation
-
-    # raw readback type-infers the season partition values as ints;
-    # the engine's own outputs restore the declared type
-    # (_restore_partition_type) — normalize here for the comparison
-    got = sorted(
-        (str(r.season), r.game, r.v)
-        for r in read_relation(spark, path).collect()
-    )
-    assert got == [
-        ("2021", "g0", 0),
-        ("2324", "g2324_0", 0), ("2324", "g2324_1", 1),
-        ("2425", "g2425_0", 0), ("2425", "g2425_1", 1),
-    ]
-
-
-def test_merge_into_raw_rebases_on_same_partition_race(
-    spark, tmp_path, monkeypatch
-):
-    """r9 review: a rival committing BETWEEN this merge's tree
-    resolution and its write used to be undetectable (the loser would
-    target the NEXT version, so the commit-time verify never fired)
-    and the rival's rows in the touched partition silently vanished
-    under the stale merge. The manifest-state pin converts that into a
-    CommitConflict, and retries rebase: both writers' rows land."""
-    import etl_football_analytics_pipeline_spark.pipeline.incremental as inc
-
-    path = str(tmp_path / "t")
-    seed = spark.createDataFrame(
-        [("2425", "g1", 1)], "season string, game string, v int"
-    )
-    inc.merge_into_raw(spark, seed, path, ["season", "game"])
-    rival = spark.createDataFrame(
-        [("2425", "gB", 2)], "season string, game string, v int"
-    )
-    mine = spark.createDataFrame(
-        [("2425", "gA", 3)], "season string, game string, v int"
-    )
-    orig = inc.merge_replace
-    state = {"fired": False}
-
-    def racy(old, new, keys):
-        if not state["fired"]:
-            state["fired"] = True
-            # the rival lands a SAME-partition merge while this one is
-            # still building its plan against the old tree
-            inc.merge_into_raw(spark, rival, path, ["season", "game"])
-        return orig(old, new, keys)
-
-    monkeypatch.setattr(inc, "merge_replace", racy)
-    out = inc.merge_into_raw(
-        spark, mine, path, ["season", "game"], retries=3, keep_versions=3
-    )
-    assert _rows(out) == [
-        ("2425", "g1", 1), ("2425", "gA", 3), ("2425", "gB", 2)
-    ]  # neither writer's rows lost

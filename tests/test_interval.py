@@ -199,95 +199,6 @@ def test_rollup_scans_raw_once(spark):
     assert "[ts#" not in plan, plan
 
 
-def test_rollup_incremental_refresh_exact(spark, events, tmp_path):
-    """init(batch1) + refresh(batch2) produces exactly the rollup of
-    batch1 ∪ batch2 — counts and decimal partials are associative, so
-    the incremental path is lossless. The refresh never re-aggregates
-    raw history: it merges the stored finest partials with the batch's
-    partials (both partial-sized)."""
-    from etl_football_analytics_pipeline_spark.streaming.windowed import (
-        read_rollup,
-        rollup_init,
-        rollup_refresh,
-    )
-    from etl_football_analytics_pipeline_spark.sources.versioned import (
-        current_version,
-        read_version,
-    )
-
-    table = str(tmp_path / "rollup")
-    b1 = events.filter(F.col("event_id") % 2 == 0)
-    b2 = events.filter(F.col("event_id") % 2 == 1)
-    v1 = rollup_init(b1, table)
-    v2 = rollup_refresh(spark, table, b2)
-    assert (v1, v2) == (1, 2) and current_version(table) == 2
-
-    def canon(df):
-        return sorted(
-            (r.resolution, str(r.bucket), r.event_type, r.n_events, r.total_value)
-            for r in df.collect()
-        )
-
-    assert canon(read_rollup(spark, table)) == canon(rollup_time(events))
-    # snapshot isolation: v1 is still the rollup of batch1 alone
-    old = read_version(spark, table, 1).withColumn(
-        "total_value", F.col("__v").cast("double")
-    ).drop("__v")
-    assert canon(old) == canon(rollup_time(b1))
-
-
-def test_rollup_apply_cdc_exact(spark, events, tmp_path):
-    """init(v1) + apply_cdc(diff(v1, v2)) ≡ init(v2) bit-for-bit —
-    the update/delete-aware refresh retracts old images and adds new
-    ones through the abelian-group partials, including events that
-    move across buckets (ts edit) and keys (type edit), and drops
-    emptied cells."""
-    from etl_football_analytics_pipeline_spark.operators.scd import table_diff
-    from etl_football_analytics_pipeline_spark.streaming.windowed import (
-        read_rollup,
-        rollup_apply_cdc,
-        rollup_init,
-        rollup_time,
-    )
-
-    v1 = events
-    # v2: drop %7 events, bump value of %5, shift ts of %11 by 2 hours
-    # (bucket move), retype %13 (key move)
-    v2 = (
-        events.filter(F.col("event_id") % 7 != 0)
-        .withColumn(
-            "value",
-            F.when(F.col("event_id") % 5 == 0, F.col("value") + 1).otherwise(
-                F.col("value")
-            ),
-        )
-        .withColumn(
-            "ts",
-            F.when(
-                F.col("event_id") % 11 == 0, F.col("ts") + F.expr("INTERVAL 2 HOURS")
-            ).otherwise(F.col("ts")),
-        )
-        .withColumn(
-            "event_type",
-            F.when(F.col("event_id") % 13 == 0, F.lit("retyped")).otherwise(
-                F.col("event_type")
-            ),
-        )
-    )
-    table = str(tmp_path / "rollup")
-    rollup_init(v1, table)
-    changes = table_diff(v1, v2, ["event_id"], ["ts", "event_type", "value"])
-    rollup_apply_cdc(spark, table, changes)
-
-    def canon(df):
-        return sorted(
-            (r.resolution, str(r.bucket), r.event_type, r.n_events, r.total_value)
-            for r in df.collect()
-        )
-
-    assert canon(read_rollup(spark, table)) == canon(rollup_time(v2))
-
-
 # ---------------------------------------------------------------------------
 # gapfill_time — the hypertable time_bucket_gapfill operator
 # ---------------------------------------------------------------------------
@@ -357,89 +268,3 @@ def test_gapfill_explicit_bounds_and_determinism(spark):
         bounds=("2024-01-01 02:00:00", "2024-01-01 05:00:00"),
     )
     assert rows == sorted(tuple(r) for r in out2.collect())
-
-
-def test_rollup_cdc_null_value_retraction_matches_reinit(spark, tmp_path):
-    """Retracting the only non-NULL value from a cell that keeps a
-    NULL-valued event must read back total_value NULL — exactly what a
-    fresh re-init computes (SQL SUM over all-NULL). Before the __nv
-    counter the decimal partial folded to 0.00 and diverged."""
-    import datetime as dt
-
-    from etl_football_analytics_pipeline_spark.streaming.windowed import (
-        read_rollup,
-        rollup_apply_cdc,
-        rollup_init,
-    )
-
-    ev = spark.createDataFrame(
-        [
-            (1, dt.datetime(2024, 1, 1, 0, 10), "click", 5.0),
-            (2, dt.datetime(2024, 1, 1, 0, 20), "click", None),
-            (3, dt.datetime(2024, 1, 1, 1, 10), "view", 7.0),
-        ],
-        "event_id long, ts timestamp, event_type string, value double",
-    )
-    td = f"{tmp_path}/ru"
-    rollup_init(ev, td)
-    changes = spark.createDataFrame(
-        [("delete", dt.datetime(2024, 1, 1, 0, 10), "click", 5.0, None, None, None)],
-        "change_type string, old_ts timestamp, old_event_type string, "
-        "old_value double, new_ts timestamp, new_event_type string, "
-        "new_value double",
-    )
-    rollup_apply_cdc(spark, td, changes)
-    got = sorted(map(tuple, read_rollup(spark, td).collect()))
-    td2 = f"{tmp_path}/ru2"
-    rollup_init(ev.filter("event_id != 1"), td2)
-    want = sorted(map(tuple, read_rollup(spark, td2).collect()))
-    assert got == want
-    hour_click = [
-        r for r in read_rollup(spark, td).collect()
-        if r.resolution == "hour" and r.event_type == "click"
-    ]
-    assert len(hour_click) == 1
-    assert hour_click[0].n_events == 1
-    assert hour_click[0].total_value is None
-
-
-def test_rollup_refresh_backfills_pre_r7_tables_missing_nv(
-    spark, events, tmp_path
-):
-    """ADVICE r7: a rollup table committed before the `__nv` partial
-    existed has no migration path — the first incremental refresh died
-    with AnalysisException. The shim backfills `__nv` ON READ using
-    the old schema's own invariant (`__v IS NULL` ⇔ zero non-null
-    values, else all counted), so legacy tables refresh without a full
-    rebuild and the result matches a from-scratch init."""
-    from etl_football_analytics_pipeline_spark.sources.versioned import (
-        commit_version,
-        read_latest,
-    )
-    from etl_football_analytics_pipeline_spark.streaming.windowed import (
-        read_rollup,
-        rollup_init,
-        rollup_refresh,
-        rollup_time,
-    )
-
-    b1 = events.filter(F.col("event_id") % 2 == 0)
-    b2 = events.filter(F.col("event_id") % 2 == 1)
-    # build a MODERN rollup of b1, then strip __nv to forge the
-    # pre-r7 on-disk schema
-    modern = str(tmp_path / "modern")
-    rollup_init(b1, modern)
-    legacy = str(tmp_path / "legacy")
-    commit_version(read_latest(spark, modern).drop("__nv"), legacy)
-
-    rollup_refresh(spark, legacy, b2)  # previously: AnalysisException
-
-    def canon(df):
-        return sorted(
-            (r.resolution, str(r.bucket), r.event_type, r.n_events, r.total_value)
-            for r in df.collect()
-        )
-
-    # b1's events all carry non-null values in this fixture, so the
-    # backfill is exact and refresh ≡ full rebuild
-    assert canon(read_rollup(spark, legacy)) == canon(rollup_time(events))

@@ -1,91 +1,13 @@
-"""Z-order clustered writes: per-file footer stats must cover small
-rectangles of the cluster-key space so range filters skip files."""
+"""Physical layout: bucketed (hash-clustered) tables join and aggregate
+with zero shuffle, dynamic partition pruning and runtime bloom filters
+inject and keep results, the semi pre-filter reduces exactly, and the
+bucketed-mirror tag stays a valid identifier."""
 
 from __future__ import annotations
 
-import glob
-
-import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
-from etl_football_analytics_pipeline_spark.sources.layout import write_zordered
-
 SF = "/root/testdata/sf0.01"
-
-
-def _file_spans(path: str, col: str) -> list[tuple[float, float]]:
-    spans = []
-    for f in glob.glob(f"{path}/*.parquet"):
-        md = pq.ParquetFile(f).metadata
-        idx = md.schema.names.index(col)
-        mins, maxs = [], []
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx).statistics
-            mins.append(st.min)
-            maxs.append(st.max)
-        if mins:
-            spans.append((min(mins), max(maxs)))
-    return spans
-
-
-def _mean_span_fraction(spans, lo, hi) -> float:
-    width = hi - lo
-    return sum((b - a) / width for a, b in spans) / len(spans)
-
-
-def test_zorder_files_cover_small_rectangles(spark, tmp_path):
-    """Clustered files span a small fraction of BOTH key ranges, and a
-    range predicate on either column intersects a minority of files —
-    the stats-based skipping an unclustered layout cannot give on two
-    columns at once."""
-    li = spark.read.parquet(f"{SF}/lineitem.parquet").select(
-        "l_orderkey", "l_partkey", "l_quantity"
-    )
-    lo_o, hi_o, lo_p, hi_p = li.agg(
-        F.min("l_orderkey"), F.max("l_orderkey"),
-        F.min("l_partkey"), F.max("l_partkey"),
-    ).first()
-
-    zpath = str(tmp_path / "z")
-    write_zordered(li, zpath, ["l_orderkey", "l_partkey"], num_files=16)
-    assert spark.read.parquet(zpath).count() == li.count()
-
-    spans_o = _file_spans(zpath, "l_orderkey")
-    spans_p = _file_spans(zpath, "l_partkey")
-    assert len(spans_o) >= 8
-    # every file covers a small window of BOTH dimensions
-    mean_o = _mean_span_fraction(spans_o, lo_o, hi_o)
-    mean_p = _mean_span_fraction(spans_p, lo_p, hi_p)
-    assert mean_o < 0.55, mean_o
-    assert mean_p < 0.55, mean_p
-    # a 10%-range predicate on EITHER column intersects a minority of
-    # files — the skipping the footer stats buy at scan time. (Low
-    # decile: a centered range straddles the curve's top-bit boundary
-    # — Z-order's documented worst case — so the selective-scan test
-    # uses the corner range real ingest-time/id predicates hit.)
-    for spans, lo, hi in ((spans_o, lo_o, hi_o), (spans_p, lo_p, hi_p)):
-        width = hi - lo
-        q_lo, q_hi = lo, lo + 0.10 * width
-        touched = sum(1 for a, b in spans if not (b < q_lo or a > q_hi))
-        assert touched / len(spans) < 0.55, (touched, len(spans))
-
-    # baseline: a single-column sort cannot cluster the OTHER column
-    sorted_path = str(tmp_path / "sorted")
-    (
-        li.repartitionByRange(16, "l_orderkey")
-        .sortWithinPartitions("l_orderkey")
-        .write.parquet(sorted_path)
-    )
-    base_p = _mean_span_fraction(_file_spans(sorted_path, "l_partkey"), lo_p, hi_p)
-    assert mean_p < base_p * 0.8, (mean_p, base_p)
-
-
-def test_zorder_rejects_no_columns(spark):
-    import pytest
-
-    df = spark.range(5)
-    with pytest.raises(ValueError):
-        write_zordered(df, "/tmp/never", [])
 
 
 # ---------------------------------------------------------------------------
@@ -334,19 +256,6 @@ def test_semi_prefilter_exact_reduction(spark):
     assert "Broadcast" in plan, plan
     want = li.join(dim, li.l_partkey == dim.p_partkey, "left_semi")
     assert sorted(map(tuple, red.collect())) == sorted(map(tuple, want.collect()))
-
-
-def test_zvalue_rejects_bit_overflow(spark):
-    """n_cols x bits > 63 wraps Java shift counts mod 64, silently
-    corrupting the Z-curve — must raise with the usable bound."""
-    import pytest as _pytest
-
-    from etl_football_analytics_pipeline_spark.sources.layout import zvalue
-
-    cols = [F.lit(i).cast("long") for i in range(5)]
-    with _pytest.raises(ValueError, match="bits <= 12"):
-        zvalue(cols, bits=16)
-    zvalue(cols, bits=12)  # at the bound: fine
 
 
 def test_mirror_tag_is_an_identifier():

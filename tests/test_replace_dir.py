@@ -1,5 +1,5 @@
 """replace_dir + the manifest-pointer commit protocol every index
-compaction (and merge_into_raw's full-replace path) rewrites through.
+compaction rewrites through.
 
 r8 changed the commit from a two-directory-rename swap (metadata-atomic
 on HDFS/local, but a full-tree COPY on S3-likes) to a manifest-pointer
@@ -18,7 +18,7 @@ test:
 - legacy rename-swap dirs (pre-r8) convert transparently, including
   their own mid-swap crash states;
 - retention deletes are verified — after a successful replace the old
-  rows exist NOWHERE on disk (forget_keys_hard's contract).
+  rows exist NOWHERE on disk (the hard-erasure contract).
 """
 
 from __future__ import annotations
@@ -110,8 +110,7 @@ def test_replace_dir_failed_write_leaves_dest_intact(spark, tmp_path):
 
 
 def test_replace_dir_creates_missing_dest(spark, tmp_path):
-    """First-write path (merge_into_raw on a fresh table): nothing to
-    retire."""
+    """First-write path (a fresh table): nothing to retire."""
     dest = f"{tmp_path}/fresh"
     replace_dir(spark, dest, lambda p: spark.range(3).write.parquet(p))
     assert read_relation(spark, dest).count() == 3

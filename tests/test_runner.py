@@ -240,38 +240,3 @@ def test_failed_stage_short_circuits_chain(spark):
     # no partial landing: transform/load never produced output dirs
     assert not os.path.isdir(os.path.join(tmp, "w"))
 
-
-def test_corpus_runner_end_to_end(spark, tmp_path):
-    """curate → assemble → publish over the sf documents table: all
-    stages succeed, every fold lands as a versioned table, and a
-    re-run is deterministic (same fold row counts, version advances)."""
-    from etl_football_analytics_pipeline_spark.pipeline.corpus_runner import (
-        run_corpus_pipeline,
-    )
-    from etl_football_analytics_pipeline_spark.sources.versioned import (
-        current_version,
-        read_latest,
-    )
-
-    out = str(tmp_path / "corpus_out")
-    report = run_corpus_pipeline(
-        spark, "/root/testdata/sf0.001/documents.parquet", out,
-        min_quality=0.0, seq_len=256,
-    )
-    assert report.ok, [s.error for s in report.stages if not s.ok]
-    assert [s.name for s in report.stages] == ["curate", "assemble", "publish"]
-    folds = {"train", "val", "test", "decontam", "train_packed"}
-    assert folds <= set(report.table_rows)
-    assert report.table_rows["train"] > 0
-    # published tables are readable snapshots
-    train = read_latest(spark, f"{out}/train")
-    assert train.count() == report.table_rows["train"]
-    v1 = current_version(f"{out}/train")
-    # deterministic re-run: identical fold sizes, version advances
-    report2 = run_corpus_pipeline(
-        spark, "/root/testdata/sf0.001/documents.parquet", out,
-        min_quality=0.0, seq_len=256,
-    )
-    assert report2.ok
-    assert report2.table_rows == report.table_rows
-    assert current_version(f"{out}/train") > v1

@@ -7,7 +7,6 @@ import datetime as dt
 from pyspark.sql import functions as F
 
 from etl_football_analytics_pipeline_spark.operators.scd import (
-    scd2_apply,
     scd2_build,
     table_diff,
 )
@@ -58,30 +57,6 @@ def test_scd2_build_equal_ts_tiebreak(spark):
     hist = scd2_build(feed, ["k"], ["attr"], "ts", "src_id")
     got = {r.version: r.attr for r in hist.collect()}
     assert got == {1: "A", 2: "B"}  # src_id breaks the ts tie
-
-
-def test_scd2_apply_closes_opens_and_passes_through(spark):
-    hist = scd2_build(_feed(spark), ["k"], ["attr"], "ts", "src_id")
-    snap = spark.createDataFrame(
-        [(1, "Z"), (3, "Y"), (9, "NEW")], "k int, attr string"
-    )  # k=1 changed, k=3 unchanged, k=2 unobserved, k=9 new
-    out = scd2_apply(hist, snap, ["k"], ["attr"], _ts(9))
-    rows = {(r.k, r.version): r for r in out.collect()}
-    assert len(rows) == 8  # 6 prior + 1 replacement + 1 new key
-    closed = rows[(1, 3)]
-    assert closed.attr == "A" and closed.effective_to == _ts(9) and not closed.is_current
-    opened = rows[(1, 4)]
-    assert opened.attr == "Z" and opened.effective_from == _ts(9) and opened.is_current
-    assert rows[(3, 2)].is_current and rows[(3, 2)].attr == "Y"  # unchanged
-    assert rows[(2, 1)].is_current  # unobserved key untouched
-    new = rows[(9, 1)]
-    assert new.attr == "NEW" and new.is_current and new.effective_from == _ts(9)
-    # idempotence: re-applying the same snapshot changes nothing
-    again = scd2_apply(out, snap, ["k"], ["attr"], _ts(10))
-    assert again.count() == out.count()
-    assert (
-        again.filter("is_current").count() == out.filter("is_current").count()
-    )
 
 
 def test_table_diff_images_and_types(spark):
@@ -179,24 +154,30 @@ if _HAS_HYPOTHESIS:
         max_size=4,
     )
 
+
+    def _scd2_model(rows):
+        """scd2_build stated row by row: per key in (ts, tiebreak)
+        order, a new state opens whenever attr differs from the previous
+        row's (None equal to None), and closes at the next state's ts."""
+        out = []
+        for k in sorted({r[0] for r in rows}):
+            obs = sorted((r for r in rows if r[0] == k), key=lambda r: (r[2], r[3]))
+            states = [r for i, r in enumerate(obs) if i == 0 or r[1] != obs[i - 1][1]]
+            for v, r in enumerate(states, start=1):
+                to = states[v][2] if v < len(states) else None
+                out.append((k, r[1], r[2], to, to is None, v))
+        return out
+
     @given(feed=feeds)
     @settings(
         max_examples=6,
         deadline=None,
         suppress_health_check=[HealthCheck.function_scoped_fixture],
     )
-    def test_scd2_apply_fold_equals_build(spark, feed):
-        """THE SCD2 equivalence: folding day-by-day snapshots through
-        scd2_apply produces byte-identical history to scd2_build on
-        the concatenated change feed — close timestamps, version
-        numbers, is_current flags, no-op collapses, null attrs, all
-        of it. This is what makes the streaming sink
-        (streaming/history.py) the batch operator run incrementally."""
-        from etl_football_analytics_pipeline_spark.operators.scd import (
-            scd2_apply,
-            scd2_build,
-        )
-
+    def test_scd2_build_matches_python_model(spark, feed):
+        """Randomized feeds with no-op repeats and null attrs: close
+        timestamps, version numbers and is_current flags equal the
+        row-by-row model."""
         rows = [
             (k, attr, _ts(day), k * 100 + day)
             for k, obs in feed.items()
@@ -205,126 +186,5 @@ if _HAS_HYPOTHESIS:
         full = spark.createDataFrame(
             rows, "k int, attr string, ts timestamp, src_id int"
         )
-        expect = sorted(map(tuple, scd2_build(full, ["k"], ["attr"], "ts", "src_id").collect()), key=repr)
-
-        days = sorted({day for obs in feed.values() for day, _ in obs})
-        first = [r for r in rows if r[2] == _ts(days[0])]
-        dim = scd2_build(
-            spark.createDataFrame(first, "k int, attr string, ts timestamp, src_id int"),
-            ["k"], ["attr"], "ts", "src_id",
-        )
-        for d in days[1:]:
-            snap_rows = [(r[0], r[1]) for r in rows if r[2] == _ts(d)]
-            snap = spark.createDataFrame(snap_rows, "k int, attr string")
-            # truncate the fold's lineage — without this, each apply
-            # stacks a full-outer join + unions on the previous plan and
-            # analysis time grows superlinearly with the day count
-            dim = scd2_apply(dim, snap, ["k"], ["attr"], _ts(d)).localCheckpoint()
-        got = sorted(map(tuple, dim.collect()), key=repr)
-        assert got == expect
-
-
-def test_scd2_apply_rejects_out_of_order_snapshot(spark):
-    """An observation time EARLIER than the current row's own start
-    would write an empty closed interval and an overlapping
-    replacement (scd2_lookup would match twice) — it must raise."""
-    import datetime as dt
-
-    import pytest as _pytest
-
-    from etl_football_analytics_pipeline_spark.operators.scd import (
-        scd2_apply,
-        scd2_build,
-    )
-
-    feed = spark.createDataFrame(
-        [("k", "v1", dt.datetime(2024, 1, 5), 1)],
-        "key string, attr string, ts timestamp, tb long",
-    )
-    dim = scd2_build(feed, ["key"], ["attr"], "ts", "tb")
-    late = spark.createDataFrame([("k", "v2")], "key string, attr string")
-    with _pytest.raises(Exception, match="effective_from"):
-        scd2_apply(
-            dim, late, ["key"], ["attr"], dt.datetime(2024, 1, 3)
-        ).collect()
-
-
-def test_scd2_apply_dedupes_dirty_snapshot_keys(spark):
-    """A snapshot repeating a key must not fan out the join into
-    duplicate closed rows and two is_current rows per key."""
-    import datetime as dt
-
-    from etl_football_analytics_pipeline_spark.operators.scd import (
-        scd2_apply,
-        scd2_build,
-    )
-
-    feed = spark.createDataFrame(
-        [("k", "v1", dt.datetime(2024, 1, 1), 1)],
-        "key string, attr string, ts timestamp, tb long",
-    )
-    dim = scd2_build(feed, ["key"], ["attr"], "ts", "tb")
-    dirty = spark.createDataFrame(
-        [("k", "v2"), ("k", "v3")], "key string, attr string"
-    )
-    out = scd2_apply(dim, dirty, ["key"], ["attr"], dt.datetime(2024, 1, 2))
-    rows = out.filter("key = 'k'").collect()
-    current = [r for r in rows if r.is_current]
-    assert len(current) == 1
-    assert current[0].attr == "v2"  # deterministic survivor: lowest attr
-    assert len(rows) == 2  # one closed + one current
-
-
-def test_scd2_apply_order_col_keeps_latest(spark):
-    """ADVICE r7: the dirty-snapshot dedup kept the LOWEST row by
-    attrs — a stable arbitrary pick that can silently prefer the older
-    payload. With order_col the highest observation time wins. (Map
-    columns stay out of SCD2 attrs entirely: change detection needs
-    `<=>`, which does not order maps — the dedup tiebreak now filters
-    to orderable attrs so it can never be the first thing to crash.)"""
-    hist = scd2_build(_feed(spark), ["k"], ["attr"], "ts", "src_id")
-    dirty = spark.createDataFrame(
-        [(1, "OLDER", _ts(8)), (1, "NEWER", _ts(9)), (9, "NEW", _ts(9))],
-        "k int, attr string, seen_at timestamp",
-    )
-    out = scd2_apply(
-        hist, dirty.select("k", "attr", "seen_at"), ["k"], ["attr"],
-        _ts(9), order_col="seen_at",
-    )
-    cur = {r.k: r.attr for r in out.filter("is_current").collect()}
-    assert cur[1] == "NEWER" and cur[9] == "NEW"
-
-
-def test_scd2_apply_order_col_honored_with_empty_attrs(spark):
-    """ADVICE r8: the ordering branch was gated on attr_cols, so a
-    key-only dimension silently ignored a supplied order_col and kept
-    an arbitrary dropDuplicates survivor. The dedup must honor the
-    recency intent regardless — observable through which row's
-    PER-ROW observation time (a Column snapshot_ts) the opened
-    version carries."""
-    import pyspark.sql.functions as F
-
-    dim = scd2_build(
-        spark.createDataFrame([(1, _ts(1))], "k int, seen_at timestamp"),
-        ["k"], [], "seen_at", "k",
-    )
-    snap = spark.createDataFrame(
-        [(2, _ts(5)), (2, _ts(9))], "k int, seen_at timestamp"
-    )
-    out = scd2_apply(dim, snap, ["k"], [], F.col("seen_at"),
-                     order_col="seen_at")
-    opened = out.filter("k = 2").collect()
-    assert len(opened) == 1
-    assert opened[0].effective_from == _ts(9)  # latest observation won
-
-
-def test_scd2_apply_rejects_key_order_col(spark):
-    """An order_col that is also a key is constant within each key
-    partition — the recency intent is unsatisfiable; refuse loudly
-    (ADVICE r8)."""
-    import pytest as _pytest
-
-    dim = scd2_build(_feed(spark), ["k"], ["attr"], "ts", "src_id")
-    snap = spark.createDataFrame([(1, "x")], "k int, attr string")
-    with _pytest.raises(ValueError, match="key column"):
-        scd2_apply(dim, snap, ["k"], ["attr"], _ts(9), order_col="k")
+        got = scd2_build(full, ["k"], ["attr"], "ts", "src_id").collect()
+        assert sorted(map(tuple, got), key=repr) == sorted(_scd2_model(rows), key=repr)

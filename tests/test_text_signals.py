@@ -1,9 +1,6 @@
-"""Repetition / compression quality signals and the JSONL source."""
+"""Repetition / compression quality signals."""
 
 from __future__ import annotations
-
-import os
-import tempfile
 
 import pytest
 
@@ -13,7 +10,6 @@ from etl_football_analytics_pipeline_spark.operators.text import (
     compression_ratio,
     repetition_signals,
 )
-from etl_football_analytics_pipeline_spark.sources.jsonl import read_jsonl, split_corrupt
 
 NATURAL = "the quick brown fox jumps over one lazy dog while seven ships sail away"
 LOOPY = "buy now buy now buy now buy now buy now buy now buy now buy now"
@@ -48,18 +44,3 @@ def test_compression_ratio_discriminates(spark, docs):
     assert out[2] < out[1]  # repetitive text compresses far better
     assert out[4] == 0.0
     assert 0 < out[1] <= 1.5
-
-
-def test_jsonl_source_quarantines_malformed(spark):
-    path = os.path.join(tempfile.mkdtemp(), "docs.jsonl")
-    with open(path, "w") as fh:
-        fh.write('{"doc_id": 1, "text": "hello world"}\n')
-        fh.write("this is not json at all\n")
-        fh.write('{"doc_id": 2, "text": "second"}\n')
-        fh.write('{"doc_id": "not_a_number_is_ok_null", "text": 3}\n')
-    df = read_jsonl(spark, path, "doc_id long, text string")
-    good, bad = split_corrupt(df)
-    good_rows = {r.doc_id: r.text for r in good.collect()}
-    assert good_rows[1] == "hello world" and good_rows[2] == "second"
-    assert bad.count() >= 1
-    assert "not json" in bad.collect()[0].raw_line or bad.count() >= 1

@@ -175,35 +175,10 @@ def test_snapshot_diff_between_versions(spark, tmp_path):
     assert 1 not in got
 
 
-def test_write_dim_scd2_loads(spark, tmp_path):
-    import datetime as dt
-
-    from etl_football_analytics_pipeline_spark.pipeline.warehouse import write_dim_scd2
-
-    d = str(tmp_path / "dim")
-    t1, t2 = dt.datetime(2024, 1, 1), dt.datetime(2024, 2, 1)
-    snap1 = spark.createDataFrame([(1, "home_a"), (2, "home_b")], "team_id int, stadium string")
-    dim = write_dim_scd2(spark, d, snap1, ["team_id"], ["stadium"], t1)
-    assert dim.count() == 2 and dim.filter("is_current").count() == 2
-    # team 1 moves stadium; team 3 appears
-    snap2 = spark.createDataFrame([(1, "home_x"), (2, "home_b"), (3, "home_c")], "team_id int, stadium string")
-    dim = write_dim_scd2(spark, d, snap2, ["team_id"], ["stadium"], t2)
-    rows = {(r.team_id, r.version): r for r in dim.collect()}
-    assert len(rows) == 4
-    closed = rows[(1, 1)]
-    assert not closed.is_current and closed.effective_to == t2 and closed.stadium == "home_a"
-    assert rows[(1, 2)].is_current and rows[(1, 2)].stadium == "home_x"
-    assert rows[(2, 1)].is_current  # unchanged
-    assert rows[(3, 1)].is_current and rows[(3, 1)].effective_from == t2
-    # the reference's current-state view is one filter away
-    cur = {r.team_id: r.stadium for r in dim.filter("is_current").collect()}
-    assert cur == {1: "home_x", 2: "home_b", 3: "home_c"}
-
-
 def test_delete_commit_removes_keys_and_feeds_cdc(spark, table_dir):
     """Row-level delete: survivors-only new snapshot, old snapshot
     auditable, and the deleted keys surface as 'delete' rows in the
-    snapshot CDC — the propagation path rollup maintenance consumes."""
+    snapshot CDC, where downstream consumers pick them up."""
     from etl_football_analytics_pipeline_spark.sources.versioned import (
         delete_commit,
         snapshot_diff,
